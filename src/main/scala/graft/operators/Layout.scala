@@ -103,6 +103,13 @@ object Layout {
     * Write-once per (dir, buckets) per JVM, like [[graft.similarity.Ann
     * .materializedCells]]; table name is dir-keyed so different corpora
     * never collide.
+    *
+    * Single-JVM assumption: the tableExists check, the orphaned-location
+    * delete and the saveAsTable below are serialized only by this
+    * JVM-local lock map. Two JVMs, or two sessions with separate catalogs,
+    * sharing one warehouse dir can race, and one may delete files that
+    * the other's live catalog still references. Share a warehouse dir
+    * only through one metastore-backed catalog, or give each JVM its own.
     */
   private val bucketedTableLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()

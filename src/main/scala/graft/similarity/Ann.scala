@@ -238,7 +238,7 @@ object Ann {
         writeCellsArtifact(spark, dir, maxRn, target)
       java.lang.Boolean.TRUE
     })
-    spark.read.parquet(target)
+    graft.sources.Sources.parquet(spark, target)
   }
 
   /** True iff `target`'s _quant sidecar is committed and stamped with this
@@ -249,7 +249,7 @@ object Ann {
     val p = new org.apache.hadoop.fs.Path(target + QuantSuffix, "_SUCCESS")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(p) && {
-      val stats = spark.read.parquet(target + QuantSuffix)
+      val stats = graft.sources.Sources.parquet(spark, target + QuantSuffix)
       // pre-stamp sidecars (no src_dir column) fail closed → rebuild
       stats.columns.contains("src_dir") && {
         val m = stats.select(col("src_dir"), col("max_rn")).head()
@@ -274,7 +274,7 @@ object Ann {
     // median 203 / max 11,122 against a 2,000 target — measured r16), so
     // the drift gate must be RELATIVE to the build profile, not to the
     // target alone, or it fires from birth on build imbalance.
-    val builtMax = spark.read.parquet(target)
+    val builtMax = graft.sources.Sources.parquet(spark, target)
       .filter(col("rn") === 1).groupBy(col("cell")).count()
       .agg(max(col("count"))).head.getLong(0)
     // the sidecar is the artifact's COMMIT MARKER (written last) and
@@ -320,7 +320,7 @@ object Ann {
     */
   def appendCells(spark: SparkSession, newVectors: DataFrame,
       cellsUri: String, driftFactor: Double = 2.0): Boolean = {
-    val stats = spark.read.parquet(cellsUri + QuantSuffix)
+    val stats = graft.sources.Sources.parquet(spark, cellsUri + QuantSuffix)
     val meta = stats.select(col("levels"), col("max_rn"), col("target_cell"),
       col("built_max_cell")).head()
     val (levels, maxRn, targetCell, builtMax) =
@@ -333,7 +333,8 @@ object Ann {
     // vec_ids (one row per vector, slim 3-column scan) drops the
     // already-routed part of the batch, making retries no-ops.
     val fresh = newVectors.join(
-      spark.read.parquet(cellsUri).filter(col("rn") === 1).select(col("vec_id")),
+      graft.sources.Sources.parquet(spark, cellsUri)
+        .filter(col("rn") === 1).select(col("vec_id")),
       Seq("vec_id"), "left_anti")
     val ie = fresh.select(col("vec_id"),
       expr("transform(cast(embedding as array<double>), v -> cast(round(v * 1000000.0) as bigint))")
@@ -348,7 +349,7 @@ object Ann {
       levels, maxRn)
       .select(col("vec_id"), col("cell"), col("rn"))
       .write.mode("append").parquet(cellsUri)
-    val maxMembers = spark.read.parquet(cellsUri)
+    val maxMembers = graft.sources.Sources.parquet(spark, cellsUri)
       .filter(col("rn") === 1).groupBy(col("cell")).count()
       .agg(max(col("count"))).head.getLong(0)
     maxMembers > (driftFactor * math.max(targetCell.toLong, builtMax)).toLong
@@ -849,8 +850,12 @@ object Ann {
     val metaRow = base.agg(count(lit(1)).as("n"),
       countDistinct(col("label")).as("nl"),
       max(size(col("ie"))).as("dims")).head()
-    val (n, nLabels, dims) =
-      (metaRow.getLong(0), metaRow.getLong(1), metaRow.getInt(2))
+    val n = metaRow.getLong(0)
+    // on no rows max(size) is NULL: name the precondition instead of
+    // letting getInt throw an opaque NPE
+    require(n > 0, s"empty embeddings table at $dir: the IVF quantizer " +
+      "needs at least one vector")
+    val (nLabels, dims) = (metaRow.getLong(1), metaRow.getInt(2))
     val levels = math.max(0, math.ceil(math.log(
       n.toDouble / (nLabels.toDouble * targetCell)) / math.log(2.0)).toInt)
     // The build's measured cost profile (round 15, 2M-vector stage trace):

@@ -73,7 +73,7 @@ object Graph {
         edges(spark, dir), target, Seq("u", "v"), nFiles = nFiles)
       java.lang.Boolean.TRUE
     })
-    spark.read.parquet(target)
+    graft.sources.Sources.parquet(spark, target)
   }
 
   private val edgeArtifacts =

@@ -21,8 +21,73 @@ import graft.functions.Portable
   */
 object Sources {
 
-  def parquet(spark: SparkSession, uri: String): DataFrame =
-    spark.read.parquet(uri)
+  /** The one parquet read path for a single, option-free path: the
+    * program's tables ([[graft.Tables.load]]) and its own artifacts. It
+    * infers each path's schema once, as the reference's `register_parquet`
+    * does once per table before every `ctx.sql` reuses it
+    * (`benches/query.rs:37-41`); `spark.read.parquet` instead runs a
+    * footer-read job on every call, a fixed cost per table per query
+    * build. A hit hands the cached schema to `spark.read.schema(...)`,
+    * which launches no job but still lists the files and mints fresh
+    * attributes, so self-joins of one table stay independent.
+    *
+    * A hit needs the same qualified path, the same recursive leaf-file
+    * listing (path, length, modification time of each file) and the same
+    * values of the session confs that change what inference returns
+    * (`spark.sql.parquet.*` and `spark.sql.legacy.parquet.*`, such as
+    * `nanosAsLong`, plus `spark.sql.caseSensitive`): a rewritten or
+    * appended path, or a flipped conf, infers again. A path that cannot be
+    * listed (missing, a glob) goes straight to `spark.read.parquet`, so it
+    * fails with Spark's own error. No lock is held while inferring: two
+    * racing misses both infer, and they store equal schemas.
+    */
+  def parquet(spark: SparkSession, uri: String): DataFrame = {
+    import org.apache.hadoop.fs.Path
+    val path = new Path(uri)
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    val qualified = fs.makeQualified(path)
+    val listing =
+      try {
+        val it = fs.listFiles(qualified, true)
+        val files = Vector.newBuilder[(String, Long, Long)]
+        while (it.hasNext) {
+          val st = it.next()
+          files += ((st.getPath.toString, st.getLen, st.getModificationTime))
+        }
+        Some(files.result())
+      } catch { case _: java.io.IOException => None }
+    listing.fold(spark.read.parquet(uri)) { files =>
+      val key = SchemaKey(qualified.toString, inferenceConfs(spark))
+      schemaCache.synchronized(Option(schemaCache.get(key))).filter(_.files == files) match {
+        case Some(hit) => spark.read.schema(hit.schema).parquet(uri)
+        case None =>
+          val df = spark.read.parquet(uri)
+          schemaCache.synchronized(schemaCache.put(key, Inferred(files, df.schema)))
+          df
+      }
+    }
+  }
+
+  private final case class SchemaKey(path: String, confs: Seq[(String, String)])
+  private final case class Inferred(files: Vector[(String, Long, Long)], schema: StructType)
+
+  /** One entry per (path, confs): a stale listing is replaced, not kept.
+    * LRU-bounded so a long-lived JVM over many paths stays small.
+    */
+  private val SchemaCacheEntries = 256
+  private val schemaCache =
+    new java.util.LinkedHashMap[SchemaKey, Inferred](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[SchemaKey, Inferred]): Boolean =
+        size() > SchemaCacheEntries
+    }
+
+  private def inferenceConfs(spark: SparkSession): Seq[(String, String)] =
+    spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") ||
+        k.startsWith("spark.sql.legacy.parquet.") ||
+        k == "spark.sql.caseSensitive"
+    }.sorted
 
   /** The `s3a://` object-store profile — the executable form of the
     * reference's S3 byte-range store (`src/object_store/s3/mod.rs:1-84`).

@@ -219,9 +219,11 @@ case class IntSquaredL2(left: Expression, right: Expression)
   * per edge — the same cost profile [[IntSquaredL2]] was built to remove
   * from the quantizer build (round 15). Exact BIGINT arithmetic, same
   * sequential accumulation order as the HOF and the oracle's
-  * SUM(xu.xi * xv.xi): bit-identical results, one tight loop. Defined ONLY
-  * for equal-length, null-free arrays — enforced by [[GraftKernels]]
-  * guards (a violating caller throws instead of silently mis-summing).
+  * SUM(xu.xi * xv.xi), in one tight loop. Results are bit-identical to the
+  * HOF fold only on equal-length, null-free arrays, the one domain the
+  * kernel accepts. On ragged or null-element input the two differ by
+  * design: the HOF yields NULL, while the [[GraftKernels]] guards make
+  * IntDot throw.
   */
 case class IntDot(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {

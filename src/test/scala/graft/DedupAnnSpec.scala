@@ -661,6 +661,14 @@ class DedupAnnSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r >= 0.7, f"recall@3 $r%.3f below 0.7")
   }
 
+  test("coarseCells: an empty embeddings table fails with a named precondition") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_empty_emb").toString
+    Tables.embeddings(spark, sf).limit(0).write.parquet(s"$dir/embeddings.parquet")
+    val e = intercept[IllegalArgumentException](
+      similarity.Ann.coarseCells(spark, dir, maxRn = 2))
+    assert(e.getMessage.contains(s"empty embeddings table at $dir"), e.getMessage)
+  }
+
   test("coarseCells: corpus-scaled quantizer is deterministic, bounded, and beats equal-work capping") {
     import spark.implicits._
     // force activation on the 500-vector fixture: targetCell=16 ->
