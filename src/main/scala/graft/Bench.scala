@@ -115,10 +115,22 @@ object Bench {
     taskTimeMs.get()
   }
 
+  /** Janino compiles of each query's most recent successful run, from
+    * Spark's JVM-wide `CodegenMetrics` (runs are sequential, so the delta is
+    * the query's own). Warm runs should read 0: a non-zero count on every
+    * sample is codegen-cache thrash or code minted per call. Written to
+    * bench_detail.json only.
+    */
+  private val compilesByQuery =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private def compileCount: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   def runOnce(spark: SparkSession,
       queries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame],
       sfDir: String)(name: String): Either[String, Double] = {
     val tt0 = drainTaskTime(spark)
+    val c0 = compileCount
     val t0 = System.nanoTime()
     val r = try {
       val task = QueryTimeoutSec.map { limit =>
@@ -140,6 +152,7 @@ object Bench {
         if (QueryTimeoutSec.isDefined) spark.sparkContext.clearJobGroup()
       }
       val t = (System.nanoTime() - t0) / 1e9
+      compilesByQuery.put(name, compileCount - c0)
       // task-time drain AFTER the wall clock stops: never in the timing
       val taskSec = (drainTaskTime(spark) - tt0) / 1000.0
       taskSecByQuery.merge(name, taskSec,
@@ -753,6 +766,8 @@ object Bench {
         "task_sec" -> jmap(ok.filter(r => taskSecByQuery.containsKey(r.name))
           .map(r => r.name -> jnum(taskSecByQuery.get(r.name)))),
         "n_samples" -> jmap(results.map(r => r.name -> r.attempts.toString)),
+        "codegen_compiles" -> jmap(ok.filter(r => compilesByQuery.containsKey(r.name))
+          .map(r => r.name -> compilesByQuery.get(r.name).toString)),
         "failed" -> jmap(failed.map(r => r.name -> jstr(r.error.get))),
         "flaky" -> jmap(flaky.map(r => r.name -> jstr(r.error.get))),
         s"concurrent_x$ConcurrentStreams" -> cc,

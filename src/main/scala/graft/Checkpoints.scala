@@ -135,7 +135,7 @@ object Checkpoints {
       // those NPEs in BlockManagerMaster.removeRdd (driverEndpoint gone).
       // Their blocks died with the context — just drop the handle.
       if (!r.sparkContext.isStopped) {
-        try r.unpersist(blocking = false)
+        try org.apache.spark.sql.graft.PartitionedCheckpoint.release(r)
         catch { case scala.util.control.NonFatal(_) => () }
       }
       r = live.poll()

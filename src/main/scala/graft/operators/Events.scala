@@ -921,7 +921,11 @@ object Events {
       .filter(col("obs_day") <= col("d1"))
       .groupBy(col("obs_day"))
       .agg(
-        countDistinct(when(col("day") === col("obs_day"), col("user_id"))).as("dau"),
+        // ud is distinct on (user_id, day), so the rows with day = obs_day
+        // carry distinct users and a plain count equals the distinct one.
+        // One distinct aggregate plans without Spark's Expand rewrite, whose
+        // projection order varies per call and so recompiled its code.
+        count(when(col("day") === col("obs_day"), col("user_id"))).as("dau"),
         countDistinct(col("user_id")).as("wau"))
   }
 

@@ -1981,10 +1981,10 @@ object Ann {
       .toDF("vec_id", "label", "dim", "v")
       .select(col("vec_id"), col("label"), col("dim"),
         expr("cast(round(v * 1000000.0) as bigint)").as("xi"))
-    val cent = x.groupBy(col("label").as("c_label"), col("dim"))
+    val cent = x.groupBy(col("label").as("c_label"), col("dim").as("c_dim"))
       .agg(expr("cast(floor(cast(sum(xi) as double) / count(1) + 0.5) as bigint)").as("cq"))
     val dists = x.join(broadcast(cent),
-        col("label") === col("c_label") && x("dim") === cent("dim"))
+        col("label") === col("c_label") && col("dim") === col("c_dim"))
       .groupBy(col("vec_id"), col("label"))
       .agg(sum(expr("(xi - cq) * (xi - cq)")).as("d"))
     val stats = dists.groupBy(col("label").as("s_label"))

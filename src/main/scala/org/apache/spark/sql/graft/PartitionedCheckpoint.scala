@@ -101,4 +101,11 @@ object PartitionedCheckpoint {
       isStreaming = false)(session, originStats, originConstraints)
     (Dataset.ofRows(session, plan), internalRdd, rows, bytes)
   }
+
+  /** Drops a checkpoint's blocks. `RDD.unpersist` would do the same, but it
+    * warns for every locally checkpointed RDD that it cannot be recomputed,
+    * which is the point of a release; `SparkContext.unpersistRDD` does the
+    * same removal without the warning.
+    */
+  def release(rdd: RDD[_]): Unit = rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 }

@@ -61,4 +61,33 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
     val cut = Checkpoints.cut(df)
     assert(cut.collect().length == df.collect().length)
   }
+
+  test("releaseAll drops every checkpoint's blocks without a recompute warning") {
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    def rddId(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.analyzed.collectFirst {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      }.get
+    val df = Tables.nation(spark, sf)
+    val ids = Seq(rddId(Checkpoints.cut(df)), rddId(Checkpoints.cutPartitioned(df)))
+    assert(ids.forall(spark.sparkContext.getPersistentRDDs.contains))
+
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("release-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        warnings.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val root = LoggerContext.getContext(false).getRootLogger
+    root.addAppender(capture)
+    try Checkpoints.releaseAll()
+    finally root.removeAppender(capture)
+
+    assert(!ids.exists(spark.sparkContext.getPersistentRDDs.contains))
+    val recompute = warnings.toArray.map(_.toString).filter(_.contains("cannot be recomputed"))
+    assert(recompute.isEmpty, recompute.mkString("; "))
+  }
 }
