@@ -5,17 +5,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Lineage truncation for iterative operators (CC rounds, PageRank, k-means,
   * BPE merges): every fixpoint loop re-plans on its previous round's output,
   * and without a cut the plan tree doubles per round until analysis time
-  * dominates. Default is `localCheckpoint()` — executor-memory blocks, no
-  * distributed filesystem needed, right for local[32] and short-lived jobs.
+  * dominates.
   *
-  * On a 1000-executor cluster an executor loss invalidates a local
-  * checkpoint's blocks and fails the job, so production runs flip
-  * `graft.checkpoint.reliable=true` to swap in reliable `checkpoint()`
-  * (HDFS/object-store backed, survives executor loss; the reference's
-  * single-process engine has no equivalent — its failure domain is the whole
-  * process). The checkpoint dir comes from `graft.checkpoint.dir`, or the
-  * already-configured SparkContext dir, or a temp dir as a last resort.
-  * Both paths are eager, so job-count and observation-firing semantics are
+  * Every cut goes through one backend,
+  * `org.apache.spark.sql.graft.PartitionedCheckpoint`: an eager
+  * materialization inside its own SQL execution (so `observe` metrics
+  * fire, as with `Dataset.checkpoint`) whose rebuilt frame keeps the
+  * executed plan's hash partitioning and carries the MEASURED rows and
+  * bytes as its statistics. [[cut]] returns the frame, [[cutCounted]] also
+  * the measured numbers.
+  *
+  * Blocks live in executor memory (spilling to local disk) by default, with
+  * no distributed filesystem needed — right for local mode and short-lived
+  * jobs. On a 1000-executor cluster an executor loss invalidates those
+  * blocks and fails the job, so production runs flip
+  * `graft.checkpoint.reliable=true`, which also writes each cut to
+  * reliable storage (HDFS/object store; survives executor loss; the
+  * reference's single-process engine has no equivalent — its failure
+  * domain is the whole process). The checkpoint dir comes from
+  * `graft.checkpoint.dir`, or the already-configured SparkContext dir, or
+  * a temp dir as a last resort. Both modes evaluate each row once and
+  * return the same frame, so results, stats and observation firing are
   * identical regardless of the flag.
   */
 object Checkpoints {
@@ -48,45 +58,25 @@ object Checkpoints {
         resolveDir(spark.sparkContext.master, spark.conf.getOption(DirConf)))
     }
 
-  def cut(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    if (reliable(spark)) {
-      ensureCheckpointDir(spark)
-      df.checkpoint()
-    } else {
-      val out = df.localCheckpoint()
-      out.queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => live.add(l.rdd)
-      }
-      out
-    }
-  }
-
-  /** [[cut]] that KEEPS the frame's hash partitioning (round 18, VERDICT
-    * r17 item 1): a loop-invariant frame checkpointed through the stock
-    * `localCheckpoint()` scans back as `UnknownPartitioning`, so every
-    * iterative round re-shuffles it; this variant pins the executed plan's
-    * real `HashPartitioning` on the rebuilt `LogicalRDD` so the round
-    * joins/aggregations on that key plan exchange-free (guide §2.4).
-    * Same eagerness, same release discipline, same reliable-mode backend
-    * as [[cut]]; values unaffected (partitioning never enters a result).
+  /** Eagerly materializes `df` and truncates its lineage, keeping its hash
+    * partitioning and replacing its statistics with the measured ones.
     */
-  def cutPartitioned(df: DataFrame): DataFrame = cutPartitionedCounted(df)._1
+  def cut(df: DataFrame): DataFrame = cutCounted(df)._1
 
-  /** [[cutPartitioned]] that also returns the materialized ROW COUNT and
-    * BYTE SIZE (summed unsafe-row bytes) — the eager checkpoint walks its
-    * rows anyway, so callers that need a size to derive a scale-adaptive
-    * partition count or a broadcast-vs-pin decision (guide §2/§3: derive
-    * from the data, never from a constant or an estimate) get the exact
-    * numbers for free, with zero extra jobs.
+  /** [[cut]] that also returns the materialized ROW COUNT and BYTE SIZE
+    * (summed unsafe-row bytes) — the eager checkpoint walks its rows anyway,
+    * so callers that need a size to derive a scale-adaptive partition count
+    * or a broadcast-vs-pin decision (guide §2/§3: derive from the data,
+    * never from a constant or an estimate) get the exact numbers for free,
+    * with zero extra jobs.
     */
-  def cutPartitionedCounted(df: DataFrame): (DataFrame, Long, Long) = {
+  def cutCounted(df: DataFrame): (DataFrame, Long, Long) = {
     val spark = df.sparkSession
     val rel = reliable(spark)
     if (rel) ensureCheckpointDir(spark)
     val (out, rdd, rows, bytes) =
       org.apache.spark.sql.graft.PartitionedCheckpoint.cut(df, rel)
-    if (!rel) live.add(rdd)
+    live.add(rdd)
     (out, rows, bytes)
   }
 
@@ -104,7 +94,7 @@ object Checkpoints {
     val minPartitionBytes = 1L << 20
     // floor 2, not 1: repartition(1, key) plans as SinglePartition, and
     // EnsureRequirements re-expands single-partition JOIN children to the
-    // conf'd shuffle partitions (measured round 18, KcoreRoundProbe:
+    // conf'd shuffle partitions (measured round 18 on a kcore peel round:
     // n=1 → both join sides re-shuffled to 8; n=2 → the pinned side plans
     // exchange-free), defeating the pin this count exists to serve
     math.max(2L, math.min(maxN.toLong, bytes / minPartitionBytes)).toInt
@@ -113,11 +103,12 @@ object Checkpoints {
   private val live =
     new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
 
-  /** Unpersists every local-checkpoint block [[cut]] has materialized so
-    * far. A local checkpoint TRUNCATES lineage, so its blocks can never
-    * be recomputed: without this, every re-execution of a checkpointing
-    * query leaks its intermediates into executor memory for the life of
-    * the session — measured r11 as the ann_recall_eval
+  /** Unpersists every checkpoint block [[cut]] has materialized so far (in
+    * reliable mode the written files stay; only the cached copy that the
+    * write job read goes). A local checkpoint TRUNCATES lineage, so its
+    * blocks can never be recomputed: without this, every re-execution of a
+    * checkpointing query leaks its intermediates into executor memory for
+    * the life of the session — measured r11 as the ann_recall_eval
     * warm-SLOWER-than-cold anomaly at the 2M-vector corpus (57 s cold →
     * 102 s warm: each warm rep re-materialized the IVF cell/LSH stages
     * on top of the last rep's still-pinned blocks, and GC fought the
@@ -143,15 +134,7 @@ object Checkpoints {
   }
 
   implicit class CheckpointOps(private val df: DataFrame) extends AnyVal {
-    /** Eagerly materializes `df` and truncates its lineage; backend chosen
-      * by [[ReliableConf]].
-      */
+    /** [[Checkpoints.cut]] as a method. */
     def cutLineage(): DataFrame = cut(df)
-
-    /** [[cutLineage]] keeping the frame's hash partitioning — for
-      * loop-invariant frames that iterative rounds re-join on the
-      * partitioning key (see [[Checkpoints.cutPartitioned]]).
-      */
-    def cutLineagePartitioned(): DataFrame = cutPartitioned(df)
   }
 }

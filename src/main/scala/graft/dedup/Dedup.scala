@@ -932,7 +932,7 @@ object Dedup {
     * The loop stops when no label shrank or at `maxRounds` — a diverging
     * input fails loudly instead of silently under-merging.
     *
-    * Job shape: ONE localCheckpoint job per round, with the convergence
+    * Job shape: ONE checkpoint job per round, with the convergence
     * check riding that same job via `observe()` (the changed-count
     * aggregates while the round materializes) instead of a second count
     * job. Lazily chaining several rounds into one job was tried and
@@ -961,22 +961,22 @@ object Dedup {
     // scans back as UnknownPartitioning, so each round re-shuffled the
     // FULL edge set — the largest per-round exchange at corpus scale.
     // Two-phase build: (1) materialize the canonical pair set ONCE
-    // (cutPartitionedCounted — the expensive pair-derivation subtree used
-    // to run twice through the old unionAll), then (2) explode both
-    // directions. The PIN is size-adaptive (guide §3.1 — broadcast the
-    // side that fits): below the session's broadcast threshold the stock
-    // checkpoint is kept, AQE broadcasts bidir in every round join, and a
-    // pinned layout would only add per-round stage-materialization jobs
-    // (measured +11 tiny jobs/round at bench scale, CcRoundProbe, zero
-    // shuffle saved — a broadcast side never shuffles); above it the
-    // rounds run sort-merge, and hash-partitioning bidir on id_b once
-    // (cutLineagePartitioned) makes the edge side of every round's
+    // (cutCounted — the expensive pair-derivation subtree used to run
+    // twice through the old unionAll), then (2) explode both directions.
+    // The PIN is size-adaptive (guide §3.1 — broadcast the side that
+    // fits): below the session's broadcast threshold bidir is cut as it
+    // comes, AQE broadcasts it in every round join, and a hash layout would
+    // only add per-round stage-materialization jobs (measured +11 tiny
+    // jobs/round at bench scale, zero shuffle saved — a broadcast side
+    // never shuffles); above it the rounds run sort-merge, and
+    // hash-partitioning bidir on id_b once before the cut (which keeps that
+    // partitioning) makes the edge side of every round's
     // neighbor join exchange-free (guide §2.4) — the largest per-round
     // exchange at corpus scale gone. Both the cutoff and the partition
     // count derive from the MATERIALIZED pair count (guide §2: from the
     // data, never a constant), so the shape is scale-continuous.
     val (pairs1, _, pairBytes) =
-      graft.Checkpoints.cutPartitionedCounted(edges.select(col("id_a"), col("id_b")))
+      graft.Checkpoints.cutCounted(edges.select(col("id_a"), col("id_b")))
     val bidirRaw = pairs1.select(explode(array(
         struct(col("id_a"), col("id_b")),
         struct(col("id_b").as("id_a"), col("id_a").as("id_b")))).as("p"))
@@ -985,10 +985,10 @@ object Dedup {
     val bcThreshold = sess.sessionState.conf.autoBroadcastJoinThreshold
     val bidir =
       if (bcThreshold > 0 && 2 * pairBytes <= bcThreshold) {
-        graft.Checkpoints.cutPartitioned(bidirRaw)
+        graft.Checkpoints.cut(bidirRaw)
       } else {
         val nPart = graft.Checkpoints.sizedPartitions(sess, 2 * pairBytes)
-        bidirRaw.repartition(nPart, col("id_b")).cutLineagePartitioned()
+        bidirRaw.repartition(nPart, col("id_b")).cutLineage()
       }
     // One round, Shiloach–Vishkin-shaped: (1) PROPAGATE — take the min of
     // self and neighbors' labels; (2) HOOK — every vertex reports its new

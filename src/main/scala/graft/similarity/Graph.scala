@@ -88,10 +88,10 @@ object Graph {
   /** Both-direction adjacency of the canonical edge set, materialized
     * ONCE (single-pass explode — the old unionAll ran the edge-derivation
     * subtree twice) and, when it is too big to broadcast,
-    * hash-partitioned on `src` and checkpointed KEEPING that partitioning
-    * ([[graft.Checkpoints.cutPartitioned]] — the stock localCheckpoint
+    * hash-partitioned on `src` and checkpointed, which KEEPS that
+    * partitioning ([[graft.Checkpoints.cut]] — a stock localCheckpoint
     * scans back as UnknownPartitioning, so every loop round re-shuffled
-    * the edge set; measured round 18, see CoPartProbe). Every iterative
+    * the edge set; measured round 18). Every iterative
     * operator below re-joins the adjacency on `src` per round, and the
     * degree table is a src-keyed count over it, so ONE partitioned
     * materialization makes the edge side of every round join — and the
@@ -116,7 +116,7 @@ object Graph {
     // never a constant): a corpus-sized graph fans out to the conf'd
     // parallelism, a bench-sized one collapses to the 2-partition floor.
     val n = graft.Checkpoints.sizedPartitions(spark, 2 * eBytes)
-    raw.repartition(n, col("src")).cutLineagePartitioned()
+    raw.repartition(n, col("src")).cutLineage()
   }
 
   /** Undirected degrees as a `src`-keyed count over the partitioned
@@ -212,7 +212,7 @@ object Graph {
     jaccardOf(edges(spark, dir))
 
   def jaccardOf(edgeSrc: DataFrame): DataFrame = {
-    val (e, _, eBytes) = graft.Checkpoints.cutPartitionedCounted(edgeSrc)
+    val (e, _, eBytes) = graft.Checkpoints.cutCounted(edgeSrc)
     // partitioned adjacency (round 18): both common-neighbor joins key on
     // adj's src (renamed u / v), so the adjacency never re-shuffles, and
     // the degree count runs on the pinned partitioning exchange-free
@@ -275,7 +275,7 @@ object Graph {
     // src-partitioned for the next round, and the final degree aggregate
     // is exchange-free too. Before: 5 exchanges/round (2 edge-sized);
     // after: 2/round (1 edge-sized) — ProfJobs A/B in OPTIMIZATION_r18.md.
-    val (e, _, eBytes) = graft.Checkpoints.cutPartitionedCounted(edges)
+    val (e, _, eBytes) = graft.Checkpoints.cutCounted(edges)
     var adj = adjPartitionedOf(e, eBytes)
     for (_ <- 1 to rounds) {
       val live = adj.groupBy(col("src")).agg(count(lit(1)).as("d"))
@@ -293,7 +293,7 @@ object Graph {
         .join(live.withColumnRenamed("src", "dst").hint("merge"),
           Seq("dst"), "left_semi")
         .select(col("dst").as("src"), col("src").as("dst"))
-        .cutLineagePartitioned()
+        .cutLineage()
     }
     degreesOfAdj(adj).withColumnRenamed("degree", "core_degree")
       .orderBy(col("vec_id"))
@@ -342,7 +342,7 @@ object Graph {
     // dst — identical on a symmetric adjacency — so the degree step is
     // exchange-free too. Only the per-step dst-keyed sums still shuffle
     // (map-side partials bound them to vertex-sized).
-    val (e, _, eBytes) = graft.Checkpoints.cutPartitionedCounted(edgeSrc)
+    val (e, _, eBytes) = graft.Checkpoints.cutCounted(edgeSrc)
     val adj = adjPartitionedOf(e, eBytes)
     // c1 = degree
     val c1 = adj.groupBy(col("src").as("vec_id")).agg(count(lit(1)).as("c1"))
@@ -413,7 +413,7 @@ object Graph {
     // partitioned adjacency (round 18): each label round joins adj on src,
     // so the pinned partitioning makes the edge side of all 3 rounds
     // exchange-free — only the vertex-sized label table moves per round
-    val (e, _, eBytes) = graft.Checkpoints.cutPartitionedCounted(edgeSrc)
+    val (e, _, eBytes) = graft.Checkpoints.cutCounted(edgeSrc)
     val adj = adjPartitionedOf(e, eBytes)
     val lab = labelsOf(adj)
     val sizes = lab.groupBy(col("label")).agg(count(lit(1)).as("community_size"))
@@ -467,7 +467,7 @@ object Graph {
     modularityOf(edges(spark, dir))
 
   def modularityOf(edgeSrc: DataFrame): DataFrame = {
-    val (e, _, eBytes) = graft.Checkpoints.cutPartitionedCounted(edgeSrc)
+    val (e, _, eBytes) = graft.Checkpoints.cutCounted(edgeSrc)
     val adj = adjPartitionedOf(e, eBytes)
     val lab = labelsOf(adj) // already lineage-cut by labelsOf
     val ein = e
@@ -534,7 +534,7 @@ object Graph {
     // partitioned adjacency (round 18): the per-round frontier join keys
     // on src, so the pinned partitioning removes the edge-set exchange
     // from every BFS round (only the vertex-sized frontier still moves)
-    val (e, _, eBytes) = graft.Checkpoints.cutPartitionedCounted(edgeSrc)
+    val (e, _, eBytes) = graft.Checkpoints.cutCounted(edgeSrc)
     val adj = adjPartitionedOf(e, eBytes)
     var r = adj.select(col("dst").as("vec_id")).distinct()
       .filter(col("vec_id") % 100 === 0)
@@ -623,14 +623,14 @@ object Graph {
     // same measured-bytes pin gate: below the broadcast threshold the
     // rounds broadcast adj and a pin would only add stage jobs; above it
     // the pinned layout makes the edge side exchange-free (guide §2.4/§3.1).
-    val (wCut, _, wBytes) = graft.Checkpoints.cutPartitionedCounted(weighted)
+    val (wCut, _, wBytes) = graft.Checkpoints.cutCounted(weighted)
     val adjRaw = wCut.select(explode(array(
         struct(col("u").as("src"), col("v").as("dst"), col("w")),
         struct(col("v").as("src"), col("u").as("dst"), col("w")))).as("p"))
       .select(col("p.src").as("src"), col("p.dst").as("dst"), col("p.w").as("w"))
     val adj = adjRaw.repartition(
         graft.Checkpoints.sizedPartitions(spark, 2 * wBytes), col("src"))
-      .cutLineagePartitioned()
+      .cutLineage()
     var d = adj.select(col("dst").as("vec_id")).distinct()
       .filter(col("vec_id") % 100 === 0)
       .withColumn("dist", lit(0L))
@@ -773,7 +773,7 @@ object Graph {
     // partitioned adjacency (round 18): degrees and the src-side degree
     // attach run exchange-free on the pinned partitioning; only the
     // dst-side attach still shuffles the edge set (second key — inherent)
-    val (e, _, eBytes) = graft.Checkpoints.cutPartitionedCounted(edgeSrc)
+    val (e, _, eBytes) = graft.Checkpoints.cutCounted(edgeSrc)
     val adj = adjPartitionedOf(e, eBytes)
     val deg = degreesOfAdj(adj)
     val pairs = adj
@@ -839,7 +839,7 @@ object Graph {
     raLinkpredOf(edges(spark, dir))
 
   def raLinkpredOf(edgeSrc: DataFrame): DataFrame = {
-    val (e, _, eBytes) = graft.Checkpoints.cutPartitionedCounted(edgeSrc)
+    val (e, _, eBytes) = graft.Checkpoints.cutCounted(edgeSrc)
     // partitioned adjacency (round 18): the wedge self-join and the
     // degree attach all key on adj's src, so with the pinned partitioning
     // the whole wedge build plans with ZERO exchanges below the candidate

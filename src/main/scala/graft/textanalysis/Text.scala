@@ -943,17 +943,25 @@ object Text {
       .distinct()
       .cutLineage()
     val counts = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val rare = sh.groupBy(col("sk")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= 20).select(col("sk"))
-    val rsh = sh.join(rare, Seq("sk"))
+    // Copies of a checkpointed frame share no exchange (each copy's scan
+    // carries its own pinned partitioning, so their plans never compare
+    // equal): a rarity JOIN of sh with its own per-sk counts, and a
+    // unionAll reading inter twice, would compute the rarity aggregate four
+    // times and inter twice (measured 20 jobs vs 12). So rarity is a window
+    // count over sk, rsh is cut on that sk partitioning (its self-join reads
+    // it as is), and one explode emits both directions.
+    val rsh = sh.withColumn("df", count(lit(1)).over(Window.partitionBy(col("sk"))))
+      .filter(col("df") <= 20).select(col("doc_id"), col("sk"))
+      .cutLineage()
     val inter = rsh.as("a").join(rsh.as("b"),
         col("a.sk") === col("b.sk") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .agg(count(lit(1)).as("ninter"))
-    val directed = inter
-      .select(col("id_a").as("doc_id"), col("id_b").as("container_id"), col("ninter"))
-      .unionAll(inter.select(col("id_b").as("doc_id"), col("id_a").as("container_id"),
-        col("ninter")))
+    val directed = inter.select(explode(array(
+        struct(col("id_a").as("doc_id"), col("id_b").as("container_id"), col("ninter")),
+        struct(col("id_b").as("doc_id"), col("id_a").as("container_id"), col("ninter"))))
+        .as("d"))
+      .select(col("d.doc_id"), col("d.container_id"), col("d.ninter"))
     val scored = directed.join(counts, Seq("doc_id"))
       .withColumn("containment_ppm", expr("ninter * 1000000 div n_sh"))
       .filter(col("containment_ppm") >= 500000L)

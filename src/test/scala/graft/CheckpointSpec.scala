@@ -1,17 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit, sum}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 /** The reliable-checkpoint flag (round-8 verdict item 5): iterative
-  * operators default to `localCheckpoint()` (executor-memory blocks — fine
-  * on local[32], lost with an executor on a real cluster). With
-  * `graft.checkpoint.reliable=true` they must run identically through
-  * reliable `checkpoint()` on a configured dir — the 1000-executor
-  * fault-tolerance path. dedup_cc is the deepest iterative consumer
-  * (pointer-jumping CC over the embedding near-dup graph), so it exercises
-  * per-round cuts, eager materialization, and multi-consumer reuse.
+  * operators checkpoint to executor-memory blocks by default (fine on
+  * local[32], lost with an executor on a real cluster). With
+  * `graft.checkpoint.reliable=true` they must run identically through a
+  * reliable checkpoint on a configured dir — the 1000-executor
+  * fault-tolerance path. Each iterative family runs in both modes:
+  * dedup_cc (pointer-jumping CC: per-round cuts, eager materialization,
+  * multi-consumer reuse, `observe`-driven stopping), graph_kcore (pinned
+  * adjacency plus peel rounds), pipeline_curate, dedup_minhash_lsh,
+  * bpe_train (cut every few merges) and an IVF build.
   */
 class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -23,23 +26,86 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.stop()
   }
 
-  test("dedup_cc under reliable checkpointing matches the local-checkpoint run") {
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft_reliable_ckpt")
-    val baseline = graft.dedup.Dedup.embeddingClusters(spark, sf)
-      .collect().map(_.toSeq).toSet
+  // the SparkContext keeps the first checkpoint dir it is given
+  lazy val ckptDir = java.nio.file.Files.createTempDirectory("graft_reliable_ckpt")
+
+  /** Runs `body` with reliable checkpointing on; returns its result and
+    * whether it wrote any checkpoint file.
+    */
+  private def reliably[T](body: => T): (T, Boolean) = {
+    def files = {
+      val walk = java.nio.file.Files.walk(ckptDir)
+      try walk.count() finally walk.close()
+    }
     spark.conf.set(Checkpoints.ReliableConf, "true")
     spark.conf.set(Checkpoints.DirConf, ckptDir.toString)
     try {
-      val reliableRun = graft.dedup.Dedup.embeddingClusters(spark, sf)
-        .collect().map(_.toSeq).toSet
-      assert(reliableRun == baseline)
-      // the reliable path must actually have written checkpoint data
-      val wrote = java.nio.file.Files.walk(ckptDir).count() > 1
-      assert(wrote, s"no checkpoint files under $ckptDir — reliable path not taken")
+      val before = files
+      val out = body
+      (out, files > before)
     } finally {
       spark.conf.unset(Checkpoints.ReliableConf)
       spark.conf.unset(Checkpoints.DirConf)
     }
+  }
+
+  private def rowsOf(key: String): Map[String, Int] =
+    SparkEntry.queries(key)(spark, sf).collect()
+      .groupBy(_.toSeq.mkString("|")).map { case (k, v) => k -> v.length }
+
+  for (key <- Seq("dedup_cc", "graph_kcore", "pipeline_curate",
+      "dedup_minhash_lsh", "bpe_train", "ann_topk_ivf")) {
+    test(s"$key under reliable checkpointing matches the local-checkpoint run") {
+      val baseline = rowsOf(key)
+      Checkpoints.releaseAll()
+      val (reliableRun, wrote) = reliably(rowsOf(key))
+      Checkpoints.releaseAll()
+      assert(reliableRun == baseline)
+      // the reliable path must actually have written checkpoint data
+      assert(wrote, s"no checkpoint files written for $key — reliable path not taken")
+    }
+  }
+
+  test("each row is evaluated once per cut, in local and reliable mode") {
+    val n = 100000L
+    val evals = spark.sparkContext.longAccumulator("udf-evals")
+    val counted = org.apache.spark.sql.functions.udf { (x: Long) => evals.add(1L); x * 2 }
+    def frame = spark.range(n).toDF("x").select(counted(col("x")).as("y"))
+    def evaluations(cutOf: DataFrame => DataFrame): Long = {
+      evals.reset()
+      val out = cutOf(frame)
+      assert(out.count() == n)
+      assert(out.agg(sum(col("y"))).head().getLong(0) == n * (n - 1))
+      evals.value
+    }
+    val cuts = Seq[(String, DataFrame => DataFrame)](
+      "cut" -> (df => Checkpoints.cut(df)),
+      "cutCounted" -> { df =>
+        val (out, rows, bytes) = Checkpoints.cutCounted(df)
+        assert(rows == n && bytes > 0)
+        out
+      })
+    for ((name, cutOf) <- cuts) {
+      assert(evaluations(cutOf) == n, s"local $name")
+      val (reliableEvals, wrote) = reliably(evaluations(cutOf))
+      assert(wrote, s"reliable $name wrote no checkpoint files")
+      assert(reliableEvals == n, s"reliable $name")
+    }
+    Checkpoints.releaseAll()
+  }
+
+  test("an observation on a cut frame completes") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val obs = new org.apache.spark.sql.Observation()
+    val cut = Checkpoints.cut(Tables.nation(spark, sf)
+      .observe(obs, count(lit(1)).as("rows")))
+    // Observation.get blocks until the query execution ends; a cut that
+    // materializes outside a SQL execution would never complete it
+    val rows = Await.result(Future(obs.get("rows")), 60.seconds)
+    assert(rows == cut.count())
+    Checkpoints.releaseAll()
   }
 
   test("reliable=true without a configured dir throws on a non-local master") {
@@ -71,7 +137,7 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
         case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
       }.get
     val df = Tables.nation(spark, sf)
-    val ids = Seq(rddId(Checkpoints.cut(df)), rddId(Checkpoints.cutPartitioned(df)))
+    val ids = Seq(rddId(Checkpoints.cut(df)), rddId(Checkpoints.cut(df)))
     assert(ids.forall(spark.sparkContext.getPersistentRDDs.contains))
 
     val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
