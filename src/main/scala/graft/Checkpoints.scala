@@ -24,7 +24,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * reference's single-process engine has no equivalent — its failure
   * domain is the whole process). The checkpoint dir comes from
   * `graft.checkpoint.dir`, or the already-configured SparkContext dir, or
-  * a temp dir as a last resort. Both modes evaluate each row once and
+  * a temp dir as a last resort; a reliable cut keeps no executor memory
+  * once its files are written. Both modes evaluate each row once and
   * return the same frame, so results, stats and observation firing are
   * identical regardless of the flag.
   */
@@ -103,9 +104,9 @@ object Checkpoints {
   private val live =
     new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
 
-  /** Unpersists every checkpoint block [[cut]] has materialized so far (in
-    * reliable mode the written files stay; only the cached copy that the
-    * write job read goes). A local checkpoint TRUNCATES lineage, so its
+  /** Unpersists every checkpoint block [[cut]] has materialized so far (a
+    * reliable cut already dropped its cached copy once its files were
+    * written, so it holds none). A local checkpoint TRUNCATES lineage, so its
     * blocks can never be recomputed: without this, every re-execution of a
     * checkpointing query leaks its intermediates into executor memory for
     * the life of the session — measured r11 as the ann_recall_eval

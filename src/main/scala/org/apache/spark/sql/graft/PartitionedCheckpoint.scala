@@ -12,7 +12,7 @@ import org.apache.spark.storage.StorageLevel
   *
   * It mirrors Spark's own `Dataset.checkpoint(eager = true)`: execute the
   * plan inside a new SQL execution, copy rows, mark the RDD for a local or
-  * reliable checkpoint, materialize it eagerly. Three things differ:
+  * reliable checkpoint, materialize it eagerly. Four things differ:
   *
   *  - The rebuilt `LogicalRDD` carries the executed plan's REAL output
   *    partitioning. The stock checkpoint rebuilds it as
@@ -28,7 +28,10 @@ import org.apache.spark.storage.StorageLevel
   *    and those MEASURED numbers become the rebuilt plan's statistics.
   *  - In reliable mode the RDD is persisted before it is marked, so the
   *    write job that Spark runs after the materialization job reads the
-  *    cached blocks instead of evaluating every row a second time.
+  *    cached blocks instead of evaluating every row a second time; the
+  *    cached copy is dropped once the files are written.
+  *  - The cut's jobs run without the execution's id (see
+  *    `outsideExecution`): the execution only brackets them.
   *
   * Values are unaffected: partitioning only tells Catalyst WHERE rows sit,
   * which it uses to elide provably redundant exchanges. One cost: a frame
@@ -56,14 +59,15 @@ object PartitionedCheckpoint {
     * The materialization runs inside `SQLExecution.withNewExecutionId`, as
     * `Dataset.checkpoint` does: the execution's end event is what completes
     * an `observe(Observation)` on `df`, so a loop that reads an observation
-    * after its cut would otherwise wait forever.
+    * after its cut would otherwise wait forever. The cut's jobs run without
+    * the execution's id (see `outsideExecution`).
     */
   def cut(df: org.apache.spark.sql.DataFrame, reliable: Boolean): (DataFrame, RDD[InternalRow], Long, Long) = {
     val ds = df.asInstanceOf[Dataset[_]]
     val session = ds.sparkSession
     val qe = ds.queryExecution
     val name = if (reliable) "checkpoint" else "localCheckpoint"
-    SQLExecution.withNewExecutionId(qe, Some(name)) {
+    SQLExecution.withNewExecutionId(qe, Some(name))(outsideExecution(session.sparkContext) {
       val physical = qe.executedPlan
       physical.resetMetrics()
       val internalRdd = physical.execute().map(_.copy())
@@ -88,6 +92,10 @@ object PartitionedCheckpoint {
         }
         Iterator((n, b))
       }.fold((0L, 0L))((a, c) => (a._1 + c._1, a._2 + c._2))
+      // the files now hold every row: drop the cached copy (and its storage
+      // level, so later reads go to the files instead of caching again), so
+      // a reliable cut keeps no executor memory, as a stock one does
+      if (reliable) internalRdd.unpersist(blocking = false)
       val finalPlan = physical match {
         case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
         case p => p
@@ -123,7 +131,22 @@ object PartitionedCheckpoint {
         finalPlan.outputOrdering.filter(_.references.forall(a => outputSet.contains(a.exprId))),
         isStreaming = false)(session, originStats, originConstraints)
       (Dataset.ofRows(session, plan), internalRdd, rows, bytes)
-    }
+    })
+  }
+
+  /** Runs a cut's jobs with no SQL execution id. The execution around the
+    * cut only brackets it: its start and end events are all `observe`
+    * needs. Without its id the jobs stay plain RDD checkpoint work, as they
+    * were before the bracket, so job-level listeners (which go by a job's
+    * `spark.sql.execution.id` property) still tell checkpoint jobs from
+    * query jobs, and AQE posts no plan-update event (each one renders the
+    * whole plan) for the cut's stages. The SQL UI thus shows a cut's
+    * execution without its jobs or operator metrics.
+    */
+  private def outsideExecution[T](sc: org.apache.spark.SparkContext)(body: => T): T = {
+    val id = sc.getLocalProperty(SQLExecution.EXECUTION_ID_KEY)
+    sc.setLocalProperty(SQLExecution.EXECUTION_ID_KEY, null)
+    try body finally sc.setLocalProperty(SQLExecution.EXECUTION_ID_KEY, id)
   }
 
   /** Drops a checkpoint's blocks. `RDD.unpersist` would do the same, but it

@@ -108,6 +108,44 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
     Checkpoints.releaseAll()
   }
 
+  test("a reliable cut keeps no cached blocks once its files are written") {
+    val ((cut, rdd), wrote) = reliably {
+      val out = Checkpoints.cut(Tables.nation(spark, sf))
+      (out, out.queryExecution.analyzed.collectFirst {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+      }.get)
+    }
+    assert(wrote)
+    assert(cut.count() == 25)
+    // reads come from the files and do not cache the rows again
+    assert(!spark.sparkContext.getPersistentRDDs.contains(rdd.id))
+    assert(rdd.getStorageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    assert(rdd.isCheckpointed)
+    Checkpoints.releaseAll()
+  }
+
+  test("a cut's jobs run outside its SQL execution") {
+    // job-level listeners tell checkpoint work from query work by the
+    // job's execution id: the cut's jobs must carry none, while the
+    // execution around them still completes observations (case above)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Boolean, Boolean)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add((Option(e.properties).exists(_.getProperty("spark.sql.execution.id") != null),
+          e.stageInfos.exists(_.rddInfos.exists(_.storageLevel.isValid))))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Checkpoints.cut(Tables.nation(spark, sf).groupBy("n_regionkey").count())
+      org.apache.spark.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val seen = jobs.toArray.toSeq.map(_.asInstanceOf[(Boolean, Boolean)])
+    // the aggregation's shuffle stage and the materialization
+    assert(seen.size >= 2 && !seen.exists(_._1), s"jobs (in execution, stores blocks): $seen")
+    assert(seen.contains((false, true)), s"jobs (in execution, stores blocks): $seen")
+    Checkpoints.releaseAll()
+  }
+
   test("reliable=true without a configured dir throws on a non-local master") {
     // a driver-local temp dir would be invisible to executors on a cluster
     intercept[IllegalArgumentException] {
