@@ -91,47 +91,24 @@ object Bench {
   /** Per-query EXECUTOR TASK TIME (round 18, VERDICT r17 item 6): at sf0.1
     * the panel is job-floor-bound, so 8-core vs 32-core wall ratios sit at
     * ≈1 and say nothing about operator parallelism — task time next to
-    * wall does: `task_sec / wall` is the realized parallelism, so
-    * "parallel but floor-bound" (task ≈ wall, both tiny) and "serial"
-    * (task ≈ wall at a LARGE wall) become distinguishable from one
-    * capture. Recorded per sample via a listener that sums
-    * `executorRunTime` between drain points; written to
-    * bench_detail.json ONLY — the stdout line's ~1900-char budget and
-    * key set stay byte-compatible. The drain happens AFTER the wall
-    * timing is taken, so timings are unaffected.
+    * wall does (see `QueryProfile.runMs`). Kept as the min over samples,
+    * like the wall floor; written to bench_detail.json ONLY — the stdout
+    * line's ~1900-char budget and key set stay byte-compatible.
     */
-  private val taskTimeMs = new java.util.concurrent.atomic.AtomicLong(0L)
   private val taskSecByQuery =
     new java.util.concurrent.ConcurrentHashMap[String, Double]()
-  private def installTaskTimeListener(spark: SparkSession): Unit =
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          taskTimeMs.addAndGet(sc.stageInfo.taskMetrics.executorRunTime)
-      })
-  private def drainTaskTime(spark: SparkSession): Long = {
-    org.apache.spark.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
-    taskTimeMs.get()
-  }
 
-  /** Janino compiles of each query's most recent successful run, from
-    * Spark's JVM-wide `CodegenMetrics` (runs are sequential, so the delta is
-    * the query's own). Warm runs should read 0: a non-zero count on every
-    * sample is codegen-cache thrash or code minted per call. Written to
-    * bench_detail.json only.
+  /** Each query's most recent successful profile. bench_detail.json takes
+    * its Janino compiles (warm runs should read 0: a non-zero count on every
+    * sample is codegen-cache thrash or code minted per call) and its job
+    * count from here.
     */
-  private val compilesByQuery =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private def compileCount: Long =
-    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+  private val lastProfile =
+    new java.util.concurrent.ConcurrentHashMap[String, QueryProfile]()
 
   def runOnce(spark: SparkSession,
       queries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame],
       sfDir: String)(name: String): Either[String, Double] = {
-    val tt0 = drainTaskTime(spark)
-    val c0 = compileCount
-    val t0 = System.nanoTime()
     val r = try {
       val task = QueryTimeoutSec.map { limit =>
         val sc = spark.sparkContext
@@ -145,16 +122,16 @@ object Bench {
         watchdog.schedule(t, limit * 1000L)
         t
       }
-      try queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      finally {
-        task.foreach(_.cancel())
-        if (QueryTimeoutSec.isDefined) spark.sparkContext.clearJobGroup()
-      }
-      val t = (System.nanoTime() - t0) / 1e9
-      compilesByQuery.put(name, compileCount - c0)
-      // task-time drain AFTER the wall clock stops: never in the timing
-      val taskSec = (drainTaskTime(spark) - tt0) / 1000.0
+      val (_, profile) =
+        try QueryProfile(spark) {
+          queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+        } finally {
+          task.foreach(_.cancel())
+          if (QueryTimeoutSec.isDefined) spark.sparkContext.clearJobGroup()
+        }
+      val t = profile.wallSec
+      val taskSec = profile.runMs / 1000.0
+      lastProfile.put(name, profile)
       taskSecByQuery.merge(name, taskSec,
         (a, b) => Double.box(math.min(a, b)))
       System.err.println(f"[bench] $name ok $t%.2fs (task ${taskSec}%.2fs)")
@@ -537,7 +514,6 @@ object Bench {
       .config("spark.scheduler.mode", "FAIR")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    installTaskTimeListener(spark)
 
     // SPARK_GRAFT_BENCH_GRAPH_ONLY=1 runs ONLY the graph_cached section
     // (edge artifact built once + the analysis suite + sssp over it) and
@@ -766,8 +742,10 @@ object Bench {
         "task_sec" -> jmap(ok.filter(r => taskSecByQuery.containsKey(r.name))
           .map(r => r.name -> jnum(taskSecByQuery.get(r.name)))),
         "n_samples" -> jmap(results.map(r => r.name -> r.attempts.toString)),
-        "codegen_compiles" -> jmap(ok.filter(r => compilesByQuery.containsKey(r.name))
-          .map(r => r.name -> compilesByQuery.get(r.name).toString)),
+        "codegen_compiles" -> jmap(ok.filter(r => lastProfile.containsKey(r.name))
+          .map(r => r.name -> lastProfile.get(r.name).compiles.toString)),
+        "jobs" -> jmap(ok.filter(r => lastProfile.containsKey(r.name))
+          .map(r => r.name -> lastProfile.get(r.name).jobs.size.toString)),
         "failed" -> jmap(failed.map(r => r.name -> jstr(r.error.get))),
         "flaky" -> jmap(flaky.map(r => r.name -> jstr(r.error.get))),
         s"concurrent_x$ConcurrentStreams" -> cc,

@@ -114,7 +114,7 @@ object Checkpoints {
     * 102 s warm: each warm rep re-materialized the IVF cell/LSH stages
     * on top of the last rep's still-pinned blocks, and GC fought the
     * growing block store). Harness seams (Bench between reps, Verify
-    * between queries, TimeOne between runs) call this at points where no
+    * between queries, ProfJobs between runs) call this at points where no
     * in-flight DataFrame can still reference the old blocks; NEVER call
     * it while a DataFrame built before the call might still be executed —
     * a released local checkpoint cannot be rebuilt.

@@ -1,16 +1,21 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
-import graft.{GraftSession, SparkEntry}
+import graft.{GraftSession, QueryProfile, SparkEntry}
 
 /** Dev profiling main (not part of the library surface): run named queries
-  * through the noop sink with a listener that counts Spark jobs / stages /
-  * tasks and sums task time, so the per-query cost can be split into
-  * "job-scheduling floor" (many tiny jobs from eager checkpoints and driver
-  * actions) vs real executor compute. Guide §1: decide WHERE the time goes
-  * before touching anything.
+  * through the noop sink under a `graft.QueryProfile`, so the per-query cost
+  * can be split into "job-scheduling floor" (many tiny jobs from eager
+  * checkpoints and driver actions) vs real executor compute. Guide §1:
+  * decide WHERE the time goes before touching anything.
+  *
+  * Every run prints wall, jobs, stages, tasks, executor task time and
+  * summed job wall. The last run also prints job wall by call site and its
+  * 12 heaviest stages by task time, with each stage's tasks, wall, input
+  * records and shuffle read/write records. The noop sink materializes every
+  * column: `.count()` would let Spark answer a pure projection from parquet
+  * metadata without reading a data page.
   *
   *   sbt "runMain graft.tools.ProfJobs graph_sssp,dedup_cc /root/testdata/sf0.1 2"
   */
@@ -29,62 +34,23 @@ object ProfJobs {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    @volatile var jobs = 0
-    @volatile var stages = 0
-    @volatile var tasks = 0L
-    @volatile var taskTimeMs = 0L
-    val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    val jobWall = new java.util.concurrent.atomic.AtomicLong(0L)
-    // per-callsite totals: (n jobs, wall ns) — which code line spawns the
-    // jobs and where their wall goes
-    val bySite = new java.util.concurrent.ConcurrentHashMap[String, (Int, Long)]()
-    val stageBySite = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        jobs += 1
-        val site = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("?")
-        jobStart.put(js.jobId, (System.nanoTime(), site))
-      }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit = {
-        Option(jobStart.remove(je.jobId)).foreach { case (t0, site) =>
-          val w = System.nanoTime() - t0
-          jobWall.addAndGet(w)
-          bySite.merge(site, (1, w),
-            (a, b) => (a._1 + b._1, a._2 + b._2))
-        }
-      }
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        stages += 1
-        tasks += sc.stageInfo.numTasks
-        taskTimeMs += sc.stageInfo.taskMetrics.executorRunTime
-        val site = sc.stageInfo.details.linesIterator.toSeq.headOption.getOrElse("?")
-        stageBySite.merge(site, sc.stageInfo.taskMetrics.executorRunTime,
-          (a, b) => Long.box(a + b))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-
     for (name <- names) {
       val q = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query '$name'"))
       for (i <- 1 to runs) {
-        jobs = 0; stages = 0; tasks = 0L; taskTimeMs = 0L; jobWall.set(0L)
-        bySite.clear(); stageBySite.clear()
-        val t0 = System.nanoTime()
-        q(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val wall = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
-        println(f"$name run$i: wall=$wall%.2fs jobs=$jobs stages=$stages " +
-          f"tasks=$tasks taskTime=${taskTimeMs / 1000.0}%.2fs jobWall=${jobWall.get() / 1e9}%.2fs")
+        val (_, p) = QueryProfile(spark) {
+          q(spark, sfDir).write.format("noop").mode("overwrite").save()
+        }
+        println(f"$name run$i: wall=${p.wallSec}%.2fs jobs=${p.jobs.size} stages=${p.stages.size} " +
+          f"tasks=${p.tasks} taskTime=${p.runMs / 1000.0}%.2fs jobWall=${p.jobs.map(_.wallMs).sum / 1000.0}%.2fs")
         if (i == runs) {
-          import scala.jdk.CollectionConverters._
-          bySite.asScala.toSeq.sortBy(-_._2._2).take(12).foreach {
-            case (site, (n, w)) =>
-              println(f"    jobsite $site%-55s n=$n%-3d wall=${w / 1e9}%.2fs")
+          p.jobSites.take(12).foreach { case (site, n, ms) =>
+            println(f"    jobsite $site%-55s n=$n%-3d wall=${ms / 1000.0}%.2fs")
           }
-          stageBySite.asScala.toSeq.sortBy(-_._2).take(12).foreach {
-            case (site, ms) =>
-              println(f"    stagesite $site%-55s taskTime=${ms / 1000.0}%.2fs")
+          p.stages.sortBy(-_.runMs).take(12).foreach { s =>
+            println(f"    stage ${s.id}%4d tasks=${s.tasks}%4d wall=${s.wallMs / 1000.0}%6.2fs " +
+              f"taskTime=${s.runMs / 1000.0}%6.2fs in=${s.inputRecords}%,13d " +
+              f"shufR=${s.shuffleReadRecords}%,13d shufW=${s.shuffleWriteRecords}%,13d  " +
+              s.name.take(70))
           }
         }
         spark.catalog.clearCache()

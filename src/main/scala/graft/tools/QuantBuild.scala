@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-import graft.GraftSession
+import graft.{GraftSession, QueryProfile}
 
 /** Measurement harness for the coarse-quantizer BUILD alone (round 15 —
   * r14 verdict item 3): times `Ann.coarseCells` end-to-end (bisecting
@@ -22,31 +22,20 @@ object QuantBuild {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import org.apache.spark.sql.functions._
-    // stage-duration profile: where the build actually spends its time
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val i = sc.stageInfo
-        val ms = (for (a <- i.completionTime; b <- i.submissionTime) yield a - b).getOrElse(0L)
-        stages.add((s"stage ${i.stageId}: ${i.name.take(90)}", ms))
-      }
-    })
     for (r <- 1 to reps) {
-      val t0 = System.nanoTime()
-      val cells = graft.similarity.Ann.coarseCells(spark, dir, maxRn = 2)
-      val row = cells.agg(count(lit(1)).as("n"),
-        sum(expr("cell * 1000003 + rn")).as("chk"),
-        countDistinct(col("cell")).as("n_cells")).head
-      val secs = (System.nanoTime() - t0) / 1e9
-      println(f"""{"rep":$r,"sec":$secs%.1f,"rows":${row.getLong(0)},"cells":${row.getLong(2)},"checksum":${row.getLong(1)}}""")
+      val (row, p) = QueryProfile(spark) {
+        val cells = graft.similarity.Ann.coarseCells(spark, dir, maxRn = 2)
+        cells.agg(count(lit(1)).as("n"),
+          sum(expr("cell * 1000003 + rn")).as("chk"),
+          countDistinct(col("cell")).as("n_cells")).head()
+      }
+      println(f"""{"rep":$r,"sec":${p.wallSec}%.1f,"rows":${row.getLong(0)},"cells":${row.getLong(2)},"checksum":${row.getLong(1)}}""")
+      // stage-duration profile: where the build actually spends its time
       if (r == reps) {
-        import scala.jdk.CollectionConverters._
-        stages.asScala.toSeq.sortBy(-_._2).take(20).foreach { case (n, ms) =>
-          println(f"PROFILE $ms%7d ms  $n")
+        p.stages.sortBy(-_.wallMs).take(20).foreach { s =>
+          println(f"PROFILE ${s.wallMs}%7d ms  stage ${s.id}: ${s.name.take(90)}")
         }
       }
-      stages.clear()
       graft.Checkpoints.releaseAll()
     }
     spark.stop()

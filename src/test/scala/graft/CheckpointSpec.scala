@@ -137,7 +137,7 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.addSparkListener(listener)
     try {
       Checkpoints.cut(Tables.nation(spark, sf).groupBy("n_regionkey").count())
-      org.apache.spark.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
+      org.apache.spark.sql.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
     val seen = jobs.toArray.toSeq.map(_.asInstanceOf[(Boolean, Boolean)])
     // the aggregation's shuffle stage and the materialization

@@ -78,9 +78,9 @@ class FailureHonestySpec extends AnyFunSuite with BeforeAndAfterAll {
     // clean run → no flag; corrupt/absent committed file → no flag, no throw
     assert(!Bench.suspectNoise(committed, committed))
     assert(Bench.committedMins("not json at all").isEmpty)
-    // the detail's later maps (codegen_compiles among them) never leak in
+    // the detail's later maps (codegen_compiles and jobs among them) never leak in
     assert(Bench.committedMins(detail.stripSuffix("}") +
-      ""","codegen_compiles":{"q_a":0,"q_zz":3}}""") == committed)
+      ""","codegen_compiles":{"q_a":0,"q_zz":3},"jobs":{"q_a":7,"q_zz":43}}""") == committed)
     assert(!Bench.suspectNoise(committed, Map.empty))
     // fewer than 10 comparable light queries → never flag
     val few = Map("a" -> 0.01, "b" -> 0.02)

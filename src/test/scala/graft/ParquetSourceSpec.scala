@@ -2,10 +2,7 @@ package graft
 
 import java.nio.file.Files
 import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.graft.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{BinaryType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -30,19 +27,10 @@ class ParquetSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def write(df: DataFrame, path: String): Unit =
     df.coalesce(1).write.mode("overwrite").parquet(path)
 
-  /** Jobs launched by `body`, counted by a listener after the bus drains. */
+  /** Jobs launched by `body`. */
   private def jobsOf[T](body: => T): (T, Int) = {
-    val jobs = new AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBridge.waitUntilEmpty(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val out = body
-      ListenerBridge.waitUntilEmpty(spark.sparkContext)
-      (out, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (out, profile) = QueryProfile(spark)(body)
+    (out, profile.jobs.size)
   }
 
   test("a repeated load launches no job and equals Spark's own inference") {
