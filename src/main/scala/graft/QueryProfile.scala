@@ -5,8 +5,10 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graft.ListenerBridge
 
 /** What one block of work cost Spark: its wall time, every job it launched
@@ -38,7 +40,10 @@ final case class QueryProfile(wallSec: Double, jobs: Seq[QueryProfile.Job],
 
 object QueryProfile {
 
-  /** A job's wall is 0 until its end event arrives. */
+  /** A job's site is its SQL execution's description (the action that
+    * started the query) when it runs inside one, else the name of its
+    * result stage. A job's wall is 0 until its end event arrives.
+    */
   final case class Job(id: Int, site: String, startMs: Long, endMs: Long) {
     def wallMs: Long = endMs - startMs
   }
@@ -78,11 +83,24 @@ object QueryProfile {
   private final class Recorder extends SparkListener {
     val jobs = new ConcurrentHashMap[Int, Job]()
     val stages = new ConcurrentLinkedQueue[Stage]()
+    private val executions = new ConcurrentHashMap[Long, String]()
 
-    // a job's call site names its result stage, the job's newest stage;
-    // SQL jobs leave the `callSite.short` property unset
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => executions.put(s.executionId, s.description)
+      case _ =>
+    }
+
+    // AQE submits a query's stage jobs from a thread pool, so their result
+    // stages are named after `CompletableFuture`; the execution they carry
+    // names the query. Other jobs (a cut's among them: it clears the id)
+    // keep the result stage's name, the job's newest stage; SQL jobs leave
+    // the `callSite.short` property unset
     override def onJobStart(e: SparkListenerJobStart): Unit = {
-      val site = e.stageInfos.maxByOption(_.stageId).map(_.name).getOrElse("?")
+      val execution = Option(e.properties)
+        .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+        .flatMap(id => Option(executions.get(id.toLong)))
+      val site = execution.getOrElse(
+        e.stageInfos.maxByOption(_.stageId).map(_.name).getOrElse("?"))
       jobs.put(e.jobId, Job(e.jobId, site, e.time, e.time))
     }
 

@@ -87,11 +87,11 @@ object Graph {
 
   /** Both-direction adjacency of the canonical edge set, materialized
     * ONCE (single-pass explode — the old unionAll ran the edge-derivation
-    * subtree twice) and, when it is too big to broadcast,
-    * hash-partitioned on `src` and checkpointed, which KEEPS that
-    * partitioning ([[graft.Checkpoints.cut]] — a stock localCheckpoint
-    * scans back as UnknownPartitioning, so every loop round re-shuffled
-    * the edge set; measured round 18). Every iterative
+    * subtree twice), hash-partitioned on `src` at every size (see the
+    * pin note below) and cut through [[graft.Checkpoints.cut]]
+    * (`PartitionedCheckpoint`), which KEEPS that partitioning (a stock
+    * localCheckpoint scans back as UnknownPartitioning, so every loop
+    * round re-shuffled the edge set; measured round 18). Every iterative
     * operator below re-joins the adjacency on `src` per round, and the
     * degree table is a src-keyed count over it, so ONE partitioned
     * materialization makes the edge side of every round join — and the
@@ -248,20 +248,33 @@ object Graph {
        | JOIN deg du ON du.vec_id = e.u
        | JOIN deg dv ON dv.vec_id = e.v""".stripMargin
 
-  /** 3-core of the similarity graph by synchronized peeling: 8 rounds of
-    * "drop every vertex with current degree < 3, restrict edges to
-    * survivors". The k-core is where the DENSE near-dup communities live
-    * (tree-ish fringe vertices peel away). Both engines run the SAME
-    * fixed 8 rounds, so the comparison is exact regardless of when the
-    * fixpoint is reached; GraphSpec asserts rounds 7→8 are a no-op at
-    * test SF (i.e. 8 rounds IS the fixpoint there).
+  /** k-core of the similarity graph by synchronized peeling: up to
+    * `rounds` rounds of "drop every vertex with current degree < k,
+    * restrict edges to survivors". The k-core is where the DENSE near-dup
+    * communities live (tree-ish fringe vertices peel away).
+    *
+    * `rounds` is a cap: the loop stops after the first round whose cut
+    * measures as many rows as the adjacency it peeled. That stop is exact.
+    * A round only filters the previous adjacency (two semi joins) and then
+    * swaps the endpoints of every row; the adjacency is symmetric, so the
+    * swap maps it to itself, and each round's rows are a sub-multiset of
+    * the last round's. An equal count therefore means an identical
+    * multiset, every later round gets the same input and returns it
+    * unchanged, and the result equals the fixed-`rounds` result that
+    * [[kcoreSql]] unrolls. The counts come from the cuts' own
+    * materialization jobs, so the stop test launches no job.
     *
     * Scale shape: each round is one vertex-sized aggregation plus two
-    * semi joins on an edge set that only SHRINKS; localCheckpoint per
-    * round keeps the plan linear in rounds (the CC loop discipline,
-    * Dedup.connectedComponents).
+    * semi joins on an edge set that only SHRINKS; one
+    * [[graft.Checkpoints.cutCounted]] per round keeps the plan linear in
+    * rounds and the adjacency pinned on `src`.
     */
-  def kcoreOf(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
+  def kcoreOf(edges: DataFrame, k: Int, rounds: Int): DataFrame =
+    kcoreWithRounds(edges, k, rounds)._1
+
+  /** [[kcoreOf]] and the number of peel rounds it ran. */
+  private[graft] def kcoreWithRounds(
+      edges: DataFrame, k: Int, rounds: Int): (DataFrame, Int) = {
     // Round 18 (VERDICT r17 item 1): peel over the SYMMETRIC adjacency,
     // partitioned once on `src` and re-pinned each round, instead of the
     // canonical (u, v) edge list. Value-identical: adj = e ∪ swap(e), so
@@ -275,9 +288,13 @@ object Graph {
     // src-partitioned for the next round, and the final degree aggregate
     // is exchange-free too. Before: 5 exchanges/round (2 edge-sized);
     // after: 2/round (1 edge-sized) — ProfJobs A/B in OPTIMIZATION_r18.md.
-    val (e, _, eBytes) = graft.Checkpoints.cutCounted(edges)
+    val (e, eRows, eBytes) = graft.Checkpoints.cutCounted(edges)
     var adj = adjPartitionedOf(e, eBytes)
-    for (_ <- 1 to rounds) {
+    // the adjacency explodes every edge into exactly two rows
+    var adjRows = 2 * eRows
+    var round = 0
+    var peeled = true
+    while (peeled && round < rounds) {
       val live = adj.groupBy(col("src")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k)
         .select(col("src"))
@@ -289,14 +306,18 @@ object Graph {
       // flipped these to BHJ, +16 broadcast jobs, kcore wall 4.3 → 6.2 s).
       // At corpus scale the vertex-sized `live` broadcast would also press
       // the 8 GB relation cap; the co-partitioned merge moves nothing.
-      adj = adj.join(live.hint("merge"), Seq("src"), "left_semi")
-        .join(live.withColumnRenamed("src", "dst").hint("merge"),
-          Seq("dst"), "left_semi")
-        .select(col("dst").as("src"), col("src").as("dst"))
-        .cutLineage()
+      val (next, nextRows, _) = graft.Checkpoints.cutCounted(
+        adj.join(live.hint("merge"), Seq("src"), "left_semi")
+          .join(live.withColumnRenamed("src", "dst").hint("merge"),
+            Seq("dst"), "left_semi")
+          .select(col("dst").as("src"), col("src").as("dst")))
+      peeled = nextRows < adjRows
+      adj = next
+      adjRows = nextRows
+      round += 1
     }
-    degreesOfAdj(adj).withColumnRenamed("degree", "core_degree")
-      .orderBy(col("vec_id"))
+    (degreesOfAdj(adj).withColumnRenamed("degree", "core_degree")
+      .orderBy(col("vec_id")), round)
   }
 
   def kcore(spark: SparkSession, dir: String): DataFrame =

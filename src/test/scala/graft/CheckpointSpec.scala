@@ -13,8 +13,9 @@ import org.scalatest.BeforeAndAfterAll
   * fault-tolerance path. Each iterative family runs in both modes:
   * dedup_cc (pointer-jumping CC: per-round cuts, eager materialization,
   * multi-consumer reuse, `observe`-driven stopping), graph_kcore (pinned
-  * adjacency plus peel rounds), pipeline_curate, dedup_minhash_lsh,
-  * bpe_train (cut every few merges) and an IVF build.
+  * adjacency plus peel rounds, stopping at the same round),
+  * pipeline_curate, dedup_minhash_lsh, bpe_train (cut every few merges)
+  * and an IVF build.
   */
 class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -64,6 +65,21 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
       // the reliable path must actually have written checkpoint data
       assert(wrote, s"no checkpoint files written for $key — reliable path not taken")
     }
+  }
+
+  test("graph_kcore's peel loop stops at the same round with the same rows in reliable mode") {
+    def run(): (Map[String, Int], Int) = {
+      val (core, rounds) = similarity.Graph.kcoreWithRounds(
+        similarity.Graph.edges(spark, sf), k = 3, rounds = 8)
+      val rows = core.collect().groupBy(_.toSeq.mkString("|")).map { case (k, v) => k -> v.length }
+      Checkpoints.releaseAll()
+      (rows, rounds)
+    }
+    val local = run()
+    val (reliableRun, wrote) = reliably(run())
+    assert(wrote, "no checkpoint files written — reliable path not taken")
+    assert(reliableRun._2 == local._2, s"rounds: reliable ${reliableRun._2}, local ${local._2}")
+    assert(reliableRun._1 == local._1)
   }
 
   test("each row is evaluated once per cut, in local and reliable mode") {

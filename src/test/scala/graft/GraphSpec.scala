@@ -54,12 +54,59 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("kcore: 8 peel rounds reach the fixpoint and every survivor keeps degree >= 3") {
-    val r8 = similarity.Graph.kcoreOf(edges, k = 3, rounds = 8)
+    // A symmetric kNN graph with k = 5 gives every vertex degree >= 5, so
+    // nothing peels and both sides stop after round 1: this no longer
+    // shows convergence over rounds; the hand-built cascade below does.
+    val (r8, ran) = similarity.Graph.kcoreWithRounds(edges, k = 3, rounds = 8)
+    assert(ran === 1, s"the loop ran $ran rounds on a graph that peels nothing")
     val r9 = similarity.Graph.kcoreOf(edges, k = 3, rounds = 9)
     assert(r8.exceptAll(r9).count() === 0 && r9.exceptAll(r8).count() === 0,
       "rounds 8 -> 9 changed the core: fixpoint not reached at test SF")
     assert(r8.filter(col("core_degree") < 3).count() === 0,
       "survivor with degree < 3 after peeling")
+  }
+
+  test("kcore: rounds is a cap; a 5-round cascade matches a plain-Scala peel at every cap") {
+    import spark.implicits._
+    // K4 on 1..4 plus a chain 5-6-7-8-9 whose vertices each hang on the
+    // core by one or two edges: 9 has degree 2, and each round's loss
+    // drops the next chain vertex to degree 2, so one vertex falls per
+    // round for 5 rounds and round 6 removes nothing
+    val cascade = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
+      (1L, 5L), (2L, 5L), (5L, 6L), (3L, 6L), (6L, 7L), (4L, 7L),
+      (7L, 8L), (1L, 8L), (8L, 9L), (2L, 9L))
+    def peel(rounds: Int): Map[Long, Long] = {
+      var es = cascade
+      for (_ <- 1 to rounds) {
+        val deg = es.flatMap { case (u, v) => Seq(u, v) }.groupBy(identity)
+        es = es.filter { case (u, v) => deg(u).size >= 3 && deg(v).size >= 3 }
+      }
+      es.flatMap { case (u, v) => Seq(u, v) }.groupBy(identity)
+        .map { case (v, s) => v -> s.size.toLong }
+    }
+    val df = cascade.toDF("u", "v")
+    for (cap <- 1 to 8) {
+      val (core, ran) = similarity.Graph.kcoreWithRounds(df, k = 3, rounds = cap)
+      val got = core.as[(Long, Long)].collect().toMap
+      assert(got === peel(cap), s"cap $cap")
+      assert(ran === math.min(cap, 6), s"cap $cap ran $ran rounds")
+    }
+    assert(peel(5) === (1L to 4L).map(_ -> 3L).toMap)
+    assert(peel(4) !== peel(5))
+  }
+
+  test("kcore: a warm graph_kcore build at sf0.001 launches at most 30 jobs") {
+    def build(): QueryProfile = {
+      val (_, p) = QueryProfile(spark) {
+        SparkEntry.queries("graph_kcore")(spark, sf)
+          .write.format("noop").mode("overwrite").save()
+      }
+      Checkpoints.releaseAll()
+      p
+    }
+    build()
+    val warm = build()
+    assert(warm.jobs.size <= 30, s"warm graph_kcore ran ${warm.jobs.size} jobs")
   }
 
   test("label_prop: communities partition the vertex set and labels are member ids") {

@@ -113,4 +113,14 @@ class QueryProfileSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(p.compiles == compiled - c0)
     assert(p.compiles >= 1)
   }
+
+  test("AQE stage jobs are listed under their query, not the thread-pool site") {
+    val (_, p) = QueryProfile(spark) {
+      SparkEntry.queries("q21_waiting_suppliers")(spark, sf)
+        .write.format("noop").mode("overwrite").save()
+    }
+    assert(p.jobs.size > 1, s"q21_waiting_suppliers ran ${p.jobs.size} jobs")
+    val pooled = p.jobSites.filter(_._1.contains("CompletableFuture"))
+    assert(pooled.isEmpty, s"jobs under a thread-pool site: $pooled")
+  }
 }
