@@ -76,10 +76,20 @@ object Checkpoints {
     val rel = reliable(spark)
     if (rel) ensureCheckpointDir(spark)
     val (out, rdd, rows, bytes) =
-      org.apache.spark.sql.graft.PartitionedCheckpoint.cut(df, rel)
+      org.apache.spark.sql.graft.PartitionedCheckpoint.cut(df, rel, callerSite())
     live.add(rdd)
     (out, rows, bytes)
   }
+
+  /** `cut at <file>:<line>` of the code that asked for the cut: the first
+    * stack frame outside this object. It names the cut's jobs in a
+    * `graft.QueryProfile`.
+    */
+  private def callerSite(): String =
+    Thread.currentThread.getStackTrace.iterator.drop(1)
+      .find(f => !f.getClassName.startsWith("graft.Checkpoints"))
+      .map(f => s"cut at ${f.getFileName}:${f.getLineNumber}")
+      .getOrElse("cut")
 
   /** Scale-adaptive partition count for a frame of `bytes` MEASURED bytes:
     * enough partitions to use the session's parallelism once the data is

@@ -9,7 +9,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListe
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-import org.apache.spark.sql.graft.ListenerBridge
+import org.apache.spark.sql.graft.{ListenerBridge, PartitionedCheckpoint}
 
 /** What one block of work cost Spark: its wall time, every job it launched
   * (with the job's call site and wall), every stage it completed, and the
@@ -41,8 +41,9 @@ final case class QueryProfile(wallSec: Double, jobs: Seq[QueryProfile.Job],
 object QueryProfile {
 
   /** A job's site is its SQL execution's description (the action that
-    * started the query) when it runs inside one, else the name of its
-    * result stage. A job's wall is 0 until its end event arrives.
+    * started the query) when it runs inside one, else the site of the cut
+    * it materializes, else the name of its result stage. A job's wall is 0
+    * until its end event arrives.
     */
   final case class Job(id: Int, site: String, startMs: Long, endMs: Long) {
     def wallMs: Long = endMs - startMs
@@ -92,14 +93,14 @@ object QueryProfile {
 
     // AQE submits a query's stage jobs from a thread pool, so their result
     // stages are named after `CompletableFuture`; the execution they carry
-    // names the query. Other jobs (a cut's among them: it clears the id)
-    // keep the result stage's name, the job's newest stage; SQL jobs leave
-    // the `callSite.short` property unset
+    // names the query. A cut's jobs carry no execution id but the cut's
+    // own site. Other jobs keep the result stage's name, the job's newest
+    // stage; SQL jobs leave the `callSite.short` property unset
     override def onJobStart(e: SparkListenerJobStart): Unit = {
-      val execution = Option(e.properties)
-        .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+      def property(key: String) = Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+      val execution = property(SQLExecution.EXECUTION_ID_KEY)
         .flatMap(id => Option(executions.get(id.toLong)))
-      val site = execution.getOrElse(
+      val site = execution.orElse(property(PartitionedCheckpoint.CutSiteKey)).getOrElse(
         e.stageInfos.maxByOption(_.stageId).map(_.name).getOrElse("?"))
       jobs.put(e.jobId, Job(e.jobId, site, e.time, e.time))
     }

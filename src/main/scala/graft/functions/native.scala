@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.graft.{BpeTokenStats, CharNgramHashes, ColumnBridge, CosineSimilarity, DotProduct, GearChunkEnds, HyperplaneBuckets, IntDot, IntSquaredL2, MinHashSignature, RollingHash, SimHash64, SortedIntersectCount}
+import org.apache.spark.sql.graft.{BpeTokenStats, CharNgramHashes, ColumnBridge, CosineSimilarity, DotProduct, GearChunkEnds, HyperplaneBuckets, IntDot, IntSquaredL2, MinHashSignature, NearestCells, RollingHash, SimHash64, SortedIntersectCount}
 
 /** Column-API front for graft's native Catalyst expressions. */
 object native {
@@ -40,6 +40,14 @@ object native {
     */
   def intSquaredL2(a: Column, b: Column): Column =
     ColumnBridge.column(IntSquaredL2(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+
+  /** The `k` cells of a fixed centroid table nearest to an `array<bigint>`
+    * column (codegen), as `array<struct<cell, dist_sq>>` in (dist_sq, cell)
+    * order. `cells` is sorted ascending, null first; `cents` is row-major.
+    */
+  def nearestCells(ie: Column, cells: Seq[java.lang.Long], cents: Seq[Long],
+      k: Int): Column =
+    ColumnBridge.column(NearestCells(ColumnBridge.expression(ie), cells, cents, k))
 
   /** Exact Σ aᵢ·bᵢ over two bigint arrays — codegen'd, replacing the
     * interpreted aggregate(zip_with(...)) fold (same accumulation order).

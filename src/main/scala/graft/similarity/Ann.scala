@@ -337,8 +337,7 @@ object Ann {
         .filter(col("rn") === 1).select(col("vec_id")),
       Seq("vec_id"), "left_anti")
     val ie = fresh.select(col("vec_id"),
-      expr("transform(cast(embedding as array<double>), v -> cast(round(v * 1000000.0) as bigint))")
-        .as("ie"))
+      ieOf("cast(embedding as array<double>)").as("ie"))
       .repartition(nPart, col("vec_id")).sortWithinPartitions(col("vec_id"))
       .cutLineage()
     // appended shards are NOT (cell, vec_id)-clustered — each append
@@ -740,26 +739,6 @@ object Ann {
       | FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id) t
       |WHERE rn <= 5""".stripMargin
 
-  /** IVF-routed k-NN graph — [[knnGraph]]'s corpus-scale path: instead of
-    * scoring every (query, corpus) pair, each QUERY probes its 2 nearest
-    * coarse cells and each MEMBER is indexed in its 2 nearest cells
-    * (assignment replication — the standard IVF spill that rescues
-    * boundary neighbors). The quantizer is the [[assignCentroids]]
-    * integer one — exact BIGINT distances, so cell routing is
-    * deterministic and ORACLE-REPLAYABLE, unlike a trained-model
-    * quantizer, and the WHOLE approximate path hash-checks. Candidate
-    * volume is (probes × replicas / cells) of the corpus per query
-    * (50% here — the dials are corpus-tuned in production; this testdata
-    * is 8 label cells + heavy isotropic noise, so tail neighbors are
-    * direction-random and recall is bounded by the candidate fraction:
-    * measured 0.62 @ 50% vs 0.40 without replication, DedupAnnSpec).
-    * Scoring still flows through TopKPerKey's partial pass, so only k
-    * rows per query per partition reach the exchange. Member lists are
-    * guarded by [[capCells]] (round-7): a power-law hot cell is trimmed
-    * to its `maxCell` centroid-closest members instead of going quadratic
-    * — the default cap never binds at test SF, so the oracle replay is
-    * unaffected (skew fixture in DedupAnnSpec proves the binding case).
-    */
   /** Hot-cell guard for IVF member lists (round-7 — capBuckets' IVF
     * analog): real embedding corpora cluster power-law, so one coarse
     * cell can hold a large share of the corpus and the cell-routed
@@ -815,14 +794,16 @@ object Ann {
     * distances instead of the flat n·k that would re-introduce the
     * quadratic the split removes.
     *
-    * At the oracle SFs levels = 0 and this IS the label quantizer —
-    * values bit-identical to the r7–r11 assignCentroids routing (same
-    * quantization, same floor(sum/n+0.5) centroid, same (dist, cell)
-    * tie-break) — so the DuckDB replays of [[knnGraphIvf]] / [[topkIvf]]
-    * hold unchanged; above the activation point membership per cell
-    * stays near targetCell and [[capCells]] becomes the skew safety net
-    * it was meant to be instead of a recall tax. Output is lineage-cut
-    * (it feeds both sides of the cell-routed join in every caller).
+    * At the oracle SFs levels = 0 and this IS the label quantizer: each
+    * vector's `maxRn` nearest label centroids, ranked inside the scan by
+    * [[native.nearestCells]] — values bit-identical to the r7–r11
+    * assignCentroids routing (same quantization, same floor(sum/n+0.5)
+    * centroid, same (dist, cell) tie-break) — so the DuckDB replays of
+    * [[knnGraphIvf]] / [[topkIvf]] hold unchanged; above the activation
+    * point membership per cell stays near targetCell and [[capCells]]
+    * becomes the skew safety net it was meant to be instead of a recall
+    * tax. Output is lineage-cut (it feeds both sides of the cell-routed
+    * join in every caller).
     */
   private[graft] def coarseCells(spark: SparkSession, dir: String,
       maxRn: Int, targetCell: Int = 2000): DataFrame =
@@ -837,27 +818,97 @@ object Ann {
     */
   private[graft] def coarseCellsWithStats(spark: SparkSession, dir: String,
       maxRn: Int, targetCell: Int = 2000): (DataFrame, DataFrame, Int, Long) = {
-    val base = Tables.embeddings(spark, dir).select(col("vec_id"),
-      col("label").cast("bigint").as("label"),
-      expr("transform(cast(embedding as array<double>), v -> cast(round(v * 1000000.0) as bigint))")
-        .as("ie"))
-    // ONE metadata pass, not three (guide §1.2 "don't compute things you
-    // throw away" + §2.3): n, |labels| and dims ride a single aggregate
-    // job — the previous count()/distinct().count()/head() trio cost two
-    // extra full corpus scans per IVF query at every scale. max(size) ==
-    // the first row's size (fixed-dim embeddings), so `levels` is
-    // unchanged.
-    val metaRow = base.agg(count(lit(1)).as("n"),
-      countDistinct(col("label")).as("nl"),
-      max(size(col("ie"))).as("dims")).head()
-    val n = metaRow.getLong(0)
-    // on no rows max(size) is NULL: name the precondition instead of
-    // letting getInt throw an opaque NPE
-    require(n > 0, s"empty embeddings table at $dir: the IVF quantizer " +
-      "needs at least one vector")
-    val (nLabels, dims) = (metaRow.getLong(1), metaRow.getInt(2))
-    val levels = math.max(0, math.ceil(math.log(
-      n.toDouble / (nLabels.toDouble * targetCell)) / math.log(2.0)).toInt)
+    val q = LabelQuantizer(spark, dir, targetCell)
+    if (q.levels == 0) {
+      // the leaf cells ARE the labels: one scan ranks every vector's cells
+      // and one cut keeps them — no window, no exchange
+      val cells = cellRows(q.base.select(col("vec_id"),
+        q.nearest(col("ie"), maxRn).as("near"))).cutLineage()
+      (cells, q.leafStats, 0, q.n)
+    } else {
+      val (cells, leafStats) = bisectedCells(spark, q, maxRn)
+      (cells, leafStats, q.levels, q.n)
+    }
+  }
+
+  /** round(x·1e6) as BIGINT per element of a double-array column: the
+    * integer coordinates every quantizer distance is exact over.
+    */
+  private def ieOf(doubles: String) =
+    expr(s"transform($doubles, v -> cast(round(v * 1000000.0) as bigint))")
+
+  /** (vec_id, cell, rn, dist_sq) rows of a frame's `near` ranking. */
+  private def cellRows(routed: DataFrame): DataFrame = routed
+    .select(col("vec_id"), posexplode(col("near")).as(Seq("pos", "nc")))
+    .select(col("vec_id"), col("nc.cell").as("cell"),
+      (col("pos") + 1).as("rn"), col("nc.dist_sq").as("dist_sq"))
+
+  /** The label quantizer every IVF build starts from. `base` is the
+    * corpus as (vec_id, label, ie); `n` and `levels` come from its
+    * label-grouped moments, and at `levels == 0` [[nearest]] routes a
+    * vector against their centroids.
+    */
+  private final class LabelQuantizer(val base: DataFrame, val dims: Int,
+      val n: Long, val levels: Int, moments: Array[org.apache.spark.sql.Row]) {
+    // a null label is a cell of its own, as in the DuckDB replay's GROUP
+    // BY; sorted null first, the window order the kernel's ties follow
+    private val cells: Seq[java.lang.Long] = moments.toSeq.map(r =>
+      if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0)))
+    // floor(sum/n + 0.5) in doubles, exactly the SQL centroid expression
+    private val cents: Seq[Long] = moments.toSeq.flatMap(r =>
+      (0 until dims).map(d =>
+        math.floor(r.getLong(d + 2).toDouble / r.getLong(1) + 0.5).toLong))
+
+    /** Each vector's `k` nearest label cells, (dist_sq, cell) order. */
+    def nearest(ie: org.apache.spark.sql.Column, k: Int): org.apache.spark.sql.Column =
+      native.nearestCells(ie, cells, cents, k)
+
+    /** The per-leaf moment table (cell, dim, s, c) at `levels == 0`. */
+    def leafStats: DataFrame = {
+      import org.apache.spark.sql.types._
+      val rows = moments.toSeq.flatMap(r => (0 until dims).map(d =>
+        org.apache.spark.sql.Row(r.get(0), d, r.get(d + 2), r.getLong(1))))
+      base.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+        StructType(Seq(StructField("cell", LongType), StructField("dim", IntegerType, nullable = false),
+          StructField("s", LongType), StructField("c", LongType, nullable = false))))
+    }
+  }
+
+  private object LabelQuantizer {
+    /** Two small jobs: a one-row probe for `dims` (the aggregate needs one
+      * sum column per dimension), then ONE label-grouped wide codegen
+      * aggregate — `dims` map-side-combined sums and a count — collected.
+      * Its |labels|·(dims+2) values are the centroid table the routing
+      * needs on every executor anyway, and they give n (Σc) and |labels|
+      * (its rows) without a separate metadata pass.
+      */
+    def apply(spark: SparkSession, dir: String, targetCell: Int): LabelQuantizer = {
+      val emb = Tables.embeddings(spark, dir)
+      val first = emb.select(size(col("embedding"))).head(1)
+      // name the precondition instead of failing on a missing row
+      require(first.nonEmpty, s"empty embeddings table at $dir: the IVF " +
+        "quantizer needs at least one vector")
+      val dims = first.head.getInt(0)
+      val base = emb.select(col("vec_id"), col("label").cast("bigint").as("label"),
+        ieOf("cast(embedding as array<double>)").as("ie"))
+      val moments = base.groupBy(col("label"))
+        .agg(count(lit(1)).as("c"), (0 until dims).map(d =>
+          sum(expr(s"element_at(ie, ${d + 1})")).as(s"s$d")): _*)
+        .collect()
+        .sortBy(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
+      val n = moments.map(_.getLong(1)).sum
+      val levels = math.max(0, math.ceil(math.log(
+        n.toDouble / (moments.length.toDouble * targetCell)) / math.log(2.0)).toInt)
+      new LabelQuantizer(base, dims, n, levels, moments)
+    }
+  }
+
+  /** The `levels > 0` build: bisect the label cells `levels` times, then
+    * route every vector by [[beamDescend]]. Returns (cells, leafStats).
+    */
+  private def bisectedCells(spark: SparkSession, q: LabelQuantizer,
+      maxRn: Int): (DataFrame, DataFrame) = {
+    val (base, dims, levels) = (q.base, q.dims, q.levels)
     // The build's measured cost profile (round 15, 2M-vector stage trace):
     // eager per-level localCheckpoints of ie-carrying frames dominated —
     // not the leaf explode, not the joins per se. So the heavy integer
@@ -868,42 +919,15 @@ object Ann {
     // is a SLIM (vec_id, cell) membership map.
     val dimSums = (0 until dims).map(d =>
       sum(expr(s"element_at(ie, ${d + 1})")).as(s"s$d"))
-    def leafStatsOf(membered: DataFrame): DataFrame = membered
-      .groupBy(col("cell"))
-      .agg(dimSums.head, (dimSums.tail :+ count(lit(1)).as("c")): _*)
-      .select(col("cell"), col("c"),
-        posexplode(array((0 until dims).map(d => col(s"s$d")): _*))
-          .as(Seq("dim", "s")))
-      .select(col("cell"), col("dim"), col("s"), col("c"))
-      .cutLineage()
-    // levels == 0 (every corpus below |labels|·targetCell, i.e. all oracle
-    // SFs): the leaf cells ARE the labels, so the bisection loop's staging
-    // frame is pure overhead — skip the repartition+sort+localCheckpoint
-    // of the ie-carrying corpus and the vec_id self-join, and build the
-    // per-leaf moments as ONE wide codegen aggregate straight off the
-    // scan (guide §2.4: remove exchanges the data doesn't need). Values
-    // are bit-identical: the same integer sums over the same groups, and
-    // the beam ranks the same exact (dist_sq, cell) pairs.
-    if (levels == 0) {
-      // (a spread+cut of the scan was also tried here — 2 more jobs and
-      // 32-wide single-row stages measured strictly worse at this corpus
-      // size; the levels==0 compute is small enough that the serial scan
-      // splits win)
-      val leafStats = leafStatsOf(
-        base.select(col("label").as("cell"), col("ie")))
-      val beam = beamDescend(
-        base.select(col("vec_id"), col("ie")), leafStats, 0, maxRn)
-      return (beam, leafStats, 0, n)
-    }
     val nPart = math.max(1, spark.sessionState.conf.numShufflePartitions)
     val basePart = base
       .repartition(nPart, col("vec_id")).sortWithinPartitions(col("vec_id"))
       .cutLineage()
-    // home path: `levels` bisecting rounds (no-op loop at oracle SFs).
-    // Each level: merge-join ie back (exchange-free), one map-side-
-    // combined mean, broadcast-join the ≤|cells| means to split, and
-    // checkpoint the slim membership (pins the groups the mean was
-    // computed from — values identical to any other execution order).
+    // `levels` bisecting rounds. Each level: merge-join ie back
+    // (exchange-free), one map-side-combined mean, broadcast-join the
+    // ≤|cells| means to split, and checkpoint the slim membership (pins
+    // the groups the mean was computed from — values identical to any
+    // other execution order).
     var home = basePart.select(col("vec_id"), col("label").as("cell"))
     for (i <- 0 until levels) {
       val joined = basePart.select(col("vec_id"), col("ie"))
@@ -927,15 +951,21 @@ object Ann {
     // |cells|×dims result explodes back to the (cell, dim, s, c) shape
     // every level's centroid table rolls up from — never a second corpus
     // pass per level.
-    val leafStats = leafStatsOf(basePart.select(col("vec_id"), col("ie"))
+    val leafStats = basePart.select(col("vec_id"), col("ie"))
       .join(home, Seq("vec_id"))
-      .select(col("cell"), col("ie")))
+      .groupBy(col("cell"))
+      .agg(dimSums.head, (dimSums.tail :+ count(lit(1)).as("c")): _*)
+      .select(col("cell"), col("c"),
+        posexplode(array((0 until dims).map(d => col(s"s$d")): _*))
+          .as(Seq("dim", "s")))
+      .select(col("cell"), col("dim"), col("s"), col("c"))
+      .cutLineage()
     // beam descent over the same co-partitioned corpus: basePart is
     // already partitioned and sorted by vec_id, so every level's
     // candidate join and ranking window run exchange-free
     val beam = beamDescend(
       basePart.select(col("vec_id"), col("ie")), leafStats, levels, maxRn)
-    (beam, leafStats, levels, n)
+    (beam, leafStats)
   }
 
   /** Beam descent of the bisection tree for an ARBITRARY vector set
@@ -994,15 +1024,67 @@ object Ann {
   def knnGraphIvf(spark: SparkSession, dir: String): DataFrame =
     knnGraphIvfTuned(spark, dir, probes = 2, replicas = 2, maxCell = 2000)
 
+  /** IVF-routed k-NN graph — [[knnGraph]]'s corpus-scale path: instead of
+    * scoring every (query, corpus) pair, each QUERY probes its `probes`
+    * nearest coarse cells and each MEMBER is indexed in its `replicas`
+    * nearest cells (assignment replication — the standard IVF spill that
+    * rescues boundary neighbors). The quantizer is the [[coarseCells]]
+    * integer one — exact BIGINT distances, so cell routing is
+    * deterministic and ORACLE-REPLAYABLE, unlike a trained-model
+    * quantizer, and the WHOLE approximate path hash-checks. Candidate
+    * volume is (probes × replicas / cells) of the corpus per query
+    * (this testdata is label cells + heavy isotropic noise, so tail
+    * neighbors are direction-random and recall is bounded by the
+    * candidate fraction: measured 0.62 @ 50% vs 0.40 without
+    * replication, DedupAnnSpec). Scoring flows through TopKPerKey's
+    * partial pass, so only k rows per query per partition reach the
+    * exchange. Member lists are guarded by [[capCells]] (round-7): a
+    * power-law hot cell is trimmed to its `maxCell` centroid-closest
+    * members instead of going quadratic; the guard is skipped when the
+    * whole corpus fits in one cell's cap, where it cannot trim (skew
+    * fixture in DedupAnnSpec proves the binding case).
+    *
+    * At `levels == 0` (every corpus under |labels|·targetCell vectors)
+    * the build is two small collected jobs — a one-row `dims` probe and the
+    * collected label moments — and then ONE pass per side: the scan that
+    * reads a vector's embedding also ranks its label cells
+    * ([[native.nearestCells]]) and slices its query and member cell sets,
+    * so the sets reach the cell join without a cell table, a rank window,
+    * a `collect_list` or a join back to the embeddings (measured at
+    * sf0.001 on 4 cores: emb_knn_graph_ivf 21 → 7 stages, graph_kcore
+    * 29 → 15). At `levels > 0` the sets are grouped from
+    * [[coarseCells]]' bisected rows.
+    */
   private[graft] def knnGraphIvfTuned(spark: SparkSession, dir: String,
       probes: Int, replicas: Int, maxCell: Int,
       targetCell: Int = 2000): DataFrame = {
-    val (cells, _, _, n) =
-      coarseCellsWithStats(spark, dir, math.max(probes, replicas), targetCell)
-    val members = capCells(cells.filter(col("rn") <= replicas),
-      maxCell, "ivf_cell_cap")
+    val q = LabelQuantizer(spark, dir, targetCell)
+    val maxRn = math.max(probes, replicas)
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+    def setsOf(cells: DataFrame, name: String): DataFrame = cells
+      .groupBy(col("vec_id")).agg(sort_array(collect_list(col("cell"))).as(name))
+      .join(e, "vec_id")
+    def capped(cells: DataFrame): DataFrame =
+      capCells(cells.filter(col("rn") <= replicas), maxCell, "ivf_cell_cap")
+    // Each side is (vec_id, emb, its sorted cell set). At levels == 0 the
+    // sets are built in the row that reads the embedding: the kernel ranks
+    // the vector's label cells and a slice keeps the first `probes` (query
+    // side) or `replicas` (member side) — no cell table, no collect_list,
+    // no join back. The member side skips capCells when n <= maxCell: a
+    // cell holds at most one row per vector, so no cell can outgrow the
+    // cap; above it the member rows go through capCells as at levels > 0.
+    val (qsets, msets) = if (q.levels == 0) {
+      val near = e.select(col("vec_id"), col("emb"),
+        q.nearest(ieOf("emb"), maxRn).as("near"))
+      def top(k: Int, name: String): DataFrame = near.select(col("vec_id"),
+        col("emb"), sort_array(slice(col("near.cell"), 1, k)).as(name))
+      (top(probes, "qcs"),
+        if (q.n <= maxCell) top(replicas, "mcs") else setsOf(capped(cellRows(near)), "mcs"))
+    } else {
+      val cells = bisectedCells(spark, q, maxRn)._1
+      (setsOf(cells.filter(col("rn") <= probes), "qcs"), setsOf(capped(cells), "mcs"))
+    }
     // Scoring shape (round-10 scaling rework — the pre-rework plan
     // distinct()ed the slim candidate pairs and THEN attached both
     // embeddings by id: at 10× corpus that was a candidate-sized exchange
@@ -1029,18 +1111,18 @@ object Ann {
     //    payload. Any salt count yields the same result set: a pair meets
     //    in exactly one (cell, salt) group either way, and the first-
     //    shared-cell filter is salt-independent.
-    val salts = math.min(16L, math.max(1L, (n + targetCell - 1) / targetCell)).toInt
-    val qside = cells.filter(col("rn") <= probes)
-      .groupBy(col("vec_id")).agg(sort_array(collect_list(col("cell"))).as("qcs"))
-      .join(e, "vec_id")
+    val salts = math.min(16L, math.max(1L, (q.n + targetCell - 1) / targetCell)).toInt
+    // explode_outer, although no cell set is empty: for an inner explode
+    // the optimizer infers a `size(set) > 0` filter and pushes it below
+    // the projection, so at levels == 0 every row would rank its cells
+    // once more (measured at sf0.1: each side's map stage took 2×)
+    val qside = qsets
       .select(col("vec_id").as("query_id"), col("emb").as("ea"), col("qcs"),
-        explode(col("qcs")).as("cell"))
+        explode_outer(col("qcs")).as("cell"))
       .withColumn("salt", explode(expr(s"sequence(0, ${salts - 1})")))
-    val mside = members
-      .groupBy(col("vec_id")).agg(sort_array(collect_list(col("cell"))).as("mcs"))
-      .join(e, "vec_id")
+    val mside = msets
       .select(col("vec_id").as("neighbor_id"), col("emb").as("eb"), col("mcs"),
-        explode(col("mcs")).as("cell"),
+        explode_outer(col("mcs")).as("cell"),
         pmod(col("vec_id"), lit(salts)).cast("int").as("salt"))
     // merge (not shuffle_hash) hint: both forbid the broadcast mis-plan
     // that serialized the probe on 1-2 input splits (r10), but the SHJ

@@ -60,14 +60,16 @@ object PartitionedCheckpoint {
     * `Dataset.checkpoint` does: the execution's end event is what completes
     * an `observe(Observation)` on `df`, so a loop that reads an observation
     * after its cut would otherwise wait forever. The cut's jobs run without
-    * the execution's id (see `outsideExecution`).
+    * the execution's id (see `outsideExecution`) and carry `site` under
+    * [[CutSiteKey]] instead.
     */
-  def cut(df: org.apache.spark.sql.DataFrame, reliable: Boolean): (DataFrame, RDD[InternalRow], Long, Long) = {
+  def cut(df: org.apache.spark.sql.DataFrame, reliable: Boolean,
+      site: String): (DataFrame, RDD[InternalRow], Long, Long) = {
     val ds = df.asInstanceOf[Dataset[_]]
     val session = ds.sparkSession
     val qe = ds.queryExecution
     val name = if (reliable) "checkpoint" else "localCheckpoint"
-    SQLExecution.withNewExecutionId(qe, Some(name))(outsideExecution(session.sparkContext) {
+    SQLExecution.withNewExecutionId(qe, Some(name))(outsideExecution(session.sparkContext, site) {
       val physical = qe.executedPlan
       physical.resetMetrics()
       val internalRdd = physical.execute().map(_.copy())
@@ -141,13 +143,24 @@ object PartitionedCheckpoint {
     * `spark.sql.execution.id` property) still tell checkpoint jobs from
     * query jobs, and AQE posts no plan-update event (each one renders the
     * whole plan) for the cut's stages. The SQL UI thus shows a cut's
-    * execution without its jobs or operator metrics.
+    * execution without its jobs or operator metrics. The jobs carry the
+    * cut's `site` under [[CutSiteKey]] instead, so a profile can still
+    * name them; AQE copies the thread's local properties into the jobs it
+    * submits from its pool, so its stage jobs inside the cut carry it too.
     */
-  private def outsideExecution[T](sc: org.apache.spark.SparkContext)(body: => T): T = {
+  private def outsideExecution[T](sc: org.apache.spark.SparkContext, site: String)(body: => T): T = {
     val id = sc.getLocalProperty(SQLExecution.EXECUTION_ID_KEY)
+    val outer = sc.getLocalProperty(CutSiteKey)
     sc.setLocalProperty(SQLExecution.EXECUTION_ID_KEY, null)
-    try body finally sc.setLocalProperty(SQLExecution.EXECUTION_ID_KEY, id)
+    sc.setLocalProperty(CutSiteKey, site)
+    try body finally {
+      sc.setLocalProperty(SQLExecution.EXECUTION_ID_KEY, id)
+      sc.setLocalProperty(CutSiteKey, outer)
+    }
   }
+
+  /** Job property naming the cut a job materializes (`cut at Ann.scala:912`). */
+  val CutSiteKey = "graft.cut.site"
 
   /** Drops a checkpoint's blocks. `RDD.unpersist` would do the same, but it
     * warns for every locally checkpointed RDD that it cannot be recomputed,

@@ -1,9 +1,11 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions (with `doGenCode`) for the hot vector/text
@@ -38,6 +40,56 @@ object GraftKernels {
     throw new IllegalArgumentException(
       s"$kernel: null array element; this kernel is only defined for " +
         "null-free arrays")
+
+  /** The `k` rows of a centroid table nearest to `x` by exact integer
+    * squared L2, as (cell, dist_sq) structs in (dist_sq, table position)
+    * order, none for a null `x`: [[NearestCells]]'s kernel. `cents` holds
+    * the table row-major (`cells.length` rows of `x`'s length); every
+    * distance is [[IntSquaredL2]]'s, with the same guards. The best `k`
+    * are kept by insertion, so a row costs |cells|·dims multiply-adds and
+    * no sort.
+    */
+  def nearestCells(x: ArrayData, cells: Array[java.lang.Long],
+      cents: Array[Long], k: Int): ArrayData = {
+    if (x == null) return new GenericArrayData(Array.empty[Any])
+    val kernel = "nearest_cells"
+    val m = cells.length
+    val dims = cents.length / m
+    if (x.numElements() != dims) {
+      throw new IllegalArgumentException(
+        s"$kernel: array length mismatch (${x.numElements()} vs $dims); " +
+          "this kernel is only defined for equal-length arrays")
+    }
+    val kk = math.min(k, m)
+    val best = new Array[Int](kk)
+    val bestD = new Array[Long](kk)
+    var size = 0
+    var j = 0
+    while (j < m) {
+      val base = j * dims
+      var acc = 0L
+      var i = 0
+      while (i < dims) {
+        if (x.isNullAt(i)) nullElement(kernel)
+        val d = x.getLong(i) - cents(base + i)
+        acc += d * d
+        i += 1
+      }
+      // a later row loses a distance tie, so table order breaks ties
+      if (size < kk || acc < bestD(kk - 1)) {
+        var p = if (size < kk) { size += 1; size - 1 } else kk - 1
+        while (p > 0 && bestD(p - 1) > acc) {
+          bestD(p) = bestD(p - 1)
+          best(p) = best(p - 1)
+          p -= 1
+        }
+        bestD(p) = acc
+        best(p) = j
+      }
+      j += 1
+    }
+    new GenericArrayData(Array.tabulate[Any](kk)(r => InternalRow(cells(best(r)), bestD(r))))
+  }
 
   /** Java source for the in-loop null-element check — empty (zero overhead)
     * when neither child's array type can contain null elements.
@@ -210,6 +262,58 @@ case class IntSquaredL2(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+/** The `k` cells of a fixed centroid table nearest to an `array<bigint>`
+  * vector, as `array<struct<cell, dist_sq>>` ordered by (dist_sq, cell):
+  * the IVF label quantizer's routing (`Ann.coarseCells` at `levels == 0`)
+  * in one row-local call instead of a cross join to the centroids and a
+  * `row_number` window over it. `cells` must be sorted ascending with a
+  * null cell first (the window's order), and `cents` is row-major
+  * (|cells|·dims). Both ride into generated code as reference objects, so
+  * the code does not grow with the table and compiles once; the Seqs are
+  * the equality carriers (the [[HyperplaneBuckets]] lesson).
+  */
+case class NearestCells(child: Expression, cells: Seq[java.lang.Long],
+    cents: Seq[Long], k: Int)
+    extends UnaryExpression with ExpectsInputTypes {
+
+  require(cells.nonEmpty && cents.length % cells.length == 0,
+    "cents must hold one row per cell")
+  @transient private lazy val cellsArr: Array[java.lang.Long] = cells.toArray
+  @transient private lazy val centsArr: Array[Long] = cents.toArray
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(LongType))
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("cell", LongType), StructField("dist_sq", LongType, nullable = false))),
+    containsNull = false)
+  override def prettyName: String = "nearest_cells"
+  // the table is data, not plan: print its size, not its values
+  override def stringArgs: Iterator[Any] = Iterator(child, s"${cells.length} cells", k)
+
+  // never null: a null vector has no cells, as it has no coordinates in
+  // the DuckDB replay. A nullable result would also let the optimizer
+  // infer `IS NOT NULL` filters over it and push them below the
+  // projection, evaluating the kernel once more per filter.
+  override def nullable: Boolean = false
+
+  override def eval(input: InternalRow): Any =
+    GraftKernels.nearestCells(child.eval(input).asInstanceOf[ArrayData], cellsArr, centsArr, k)
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cellsRef = ctx.addReferenceObj("cells", cellsArr, "java.lang.Long[]")
+    val centsRef = ctx.addReferenceObj("cents", centsArr, "long[]")
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${c.code}
+      |${CodeGenerator.javaType(dataType)} ${ev.value} =
+      |  org.apache.spark.sql.graft.GraftKernels.nearestCells(
+      |    ${c.isNull} ? null : ${c.value}, $cellsRef, $centsRef, $k);""".stripMargin,
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 }
 
 /** Σ aᵢ·bᵢ over two `array<bigint>` columns — the exact integer dot

@@ -669,6 +669,33 @@ class DedupAnnSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.contains(s"empty embeddings table at $dir"), e.getMessage)
   }
 
+  test("emb_knn_graph_ivf and graph_kcore: an empty embeddings table fails with a named precondition") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_empty_fixture").toString
+    tools.MakeFixture.write(spark, sf, dir, 1, Some("empty-embeddings"))
+    for (key <- Seq("emb_knn_graph_ivf", "graph_kcore")) {
+      val e = intercept[IllegalArgumentException](
+        SparkEntry.queries(key)(spark, dir).write.format("noop").mode("overwrite").save())
+      assert(e.getMessage.contains(s"empty embeddings table at $dir"), s"$key: ${e.getMessage}")
+    }
+  }
+
+  test("IVF kNN edge build: one-vector and single-label tables give DuckDB's rows") {
+    val keys = Seq("emb_knn_graph_ivf", "graph_degree_hist", "graph_kcore")
+    for (variant <- Seq("one-vector", "single-label")) {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_$variant").toString
+      val out = java.nio.file.Files.createTempDirectory(s"graft_${variant}_out").toString
+      tools.MakeFixture.write(spark, sf, dir, 1, Some(variant))
+      Verify.dumpAll(spark, keys.map(k => k -> SparkEntry.queries(k)).toMap, dir, out)
+      Verify.writeJsonMap(s"$out/oracle_sql.json", keys.map(k => k -> SparkEntry.oracleSql(k)))
+      Checkpoints.releaseAll()
+      val log = new StringBuilder
+      val rc = scala.sys.process.Process(Seq("python3", "tools/check_oracle.py", dir, out))
+        .!(scala.sys.process.ProcessLogger(l => log.append(l).append('\n'), l => log.append(l).append('\n')))
+      assert(rc == 0 && log.toString.contains(s"${keys.size}/${keys.size} oracle queries match"),
+        s"$variant:\n$log")
+    }
+  }
+
   test("coarseCells: corpus-scaled quantizer is deterministic, bounded, and beats equal-work capping") {
     import spark.implicits._
     // force activation on the 500-vector fixture: targetCell=16 ->

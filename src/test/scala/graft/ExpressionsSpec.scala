@@ -321,9 +321,53 @@ class ExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
         native.sortedIntersectCount(
           expr("array(1L, 2L, 3L)"), expr("array(2L, 3L, 4L)")),
         native.intSquaredL2(
-          expr("array(1L, 2L, 3L)"), expr("array(2L, 4L, 6L)"))).head
+          expr("array(1L, 2L, 3L)"), expr("array(2L, 4L, 6L)")),
+        native.nearestCells(expr("array(1L, 2L)"), Seq(null, 7L), Seq(0L, 0L, 1L, 2L), 1)).head
       assert(!out.anyNull)
     } finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+  }
+
+  test("nearestCells equals a cross join ranked by a (dist_sq, cell) window, ties and null cell included") {
+    import spark.implicits._
+    // 2-d centroids; null sorts first, as in an ascending window order
+    val cells: Seq[java.lang.Long] = Seq(null, 1L, 2L, 5L)
+    val cents = Seq(0L, 0L, 2L, 0L, 0L, 2L, -2L, 0L)
+    val rnd = new scala.util.Random(7)
+    // (1,1) and (2,2) tie on several cells; the rest are random
+    val vectors = (Seq(Seq(0L, 0L), Seq(1L, 1L), Seq(2L, 2L)) ++
+      Seq.fill(40)(Seq.fill(2)(rnd.nextInt(7).toLong - 3)))
+      .zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "ie")
+    val table = cells.zip(cents.grouped(2).toSeq).map { case (c, x) => (c, x) }
+      .toDF("cell", "cent")
+    for (k <- Seq(2, 10)) {
+      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("id"))
+        .orderBy(col("dist_sq"), col("cell"))
+      val want = vectors.crossJoin(table)
+        .withColumn("dist_sq", native.intSquaredL2(col("ie"), col("cent")))
+        .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+        .select(col("id"), col("rn"), col("cell"), col("dist_sq"))
+        .collect().map(_.toString).sorted.toSeq
+      def got() = vectors
+        .select(col("id"), posexplode(native.nearestCells(col("ie"), cells, cents, k)))
+        .select(col("id"), (col("pos") + 1).as("rn"), col("col.cell"), col("col.dist_sq"))
+        .collect().map(_.toString).sorted.toSeq
+      assert(got() == want, s"k=$k codegen")
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      try assert(got() == want, s"k=$k interpreted")
+      finally {
+        spark.conf.set("spark.sql.codegen.wholeStage", "true")
+        spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+      }
+    }
+    // a null vector has no cells (it has no coordinates to rank)
+    val none = Seq((1L, Option.empty[Seq[Long]])).toDF("id", "ie")
+      .select(native.nearestCells(col("ie"), cells, cents, 2)).head
+    assert(none.getSeq[Any](0).isEmpty)
+    val ragged = Seq(Seq(1L, 2L, 3L)).toDF("ie")
+      .select(native.nearestCells(col("ie"), cells, cents, 2))
+    val e = intercept[Exception](ragged.collect())
+    assert(e.getMessage.contains("array length mismatch"), e.getMessage)
   }
 
   test("codegen path produces same results as interpreted eval") {

@@ -95,18 +95,30 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(peel(4) !== peel(5))
   }
 
-  test("kcore: a warm graph_kcore build at sf0.001 launches at most 30 jobs") {
+  /** The profile of a key's second build (the first pays schema inference). */
+  private def warmProfile(key: String): QueryProfile = {
     def build(): QueryProfile = {
       val (_, p) = QueryProfile(spark) {
-        SparkEntry.queries("graph_kcore")(spark, sf)
+        SparkEntry.queries(key)(spark, sf)
           .write.format("noop").mode("overwrite").save()
       }
       Checkpoints.releaseAll()
       p
     }
     build()
-    val warm = build()
-    assert(warm.jobs.size <= 30, s"warm graph_kcore ran ${warm.jobs.size} jobs")
+    build()
+  }
+
+  // Stage floors measured at sf0.001 on 4 cores. The IVF edge build is
+  // 7 stages: the dims probe, the label aggregate's two, the two cell-set
+  // map stages, the cell join with TopKPerKey's partial pass, and its
+  // final pass; every graph key adds its own above that.
+  for ((key, maxStages) <- Seq("graph_kcore" -> 15, "graph_degree_hist" -> 12,
+      "emb_knn_graph_ivf" -> 7)) {
+    test(s"$key: a warm build at sf0.001 runs at most $maxStages stages") {
+      val warm = warmProfile(key)
+      assert(warm.stages.size <= maxStages, s"warm $key ran ${warm.stages.size} stages")
+    }
   }
 
   test("label_prop: communities partition the vertex set and labels are member ids") {

@@ -538,6 +538,16 @@ class PlanAssertionsSpec extends AnyFunSuite with BeforeAndAfterAll
       s"salted cell join must shuffle, not broadcast:\n${cellJoin.mkString("\n")}")
   }
 
+  test("emb_knn_graph_ivf: at levels == 0 the cell sets are row-local, no window or collect_list") {
+    val p = planOf("emb_knn_graph_ivf")
+    // each side's cell set is ranked and sliced in the row that reads its
+    // embedding: no rank window, no cell-set aggregate joined back, and no
+    // cross join against the centroids
+    assert(p.contains("nearest_cells"), p)
+    for (op <- Seq("Window", "collect_list", "NestedLoopJoin"))
+      assert(!p.contains(op), s"$op in the levels == 0 edge build:\n$p")
+  }
+
   test("q_name_match: pair generator is a non-broadcast equi-join on the blocking key") {
     val p = planOf("q_name_match")
     // the blocked ER pair join must shuffle-partition by block so pair

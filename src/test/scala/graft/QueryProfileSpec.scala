@@ -114,6 +114,14 @@ class QueryProfileSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(p.compiles >= 1)
   }
 
+  test("a cut's jobs, AQE stage jobs included, are listed under the cut's own site") {
+    val p = kcore()
+    val pooled = p.jobSites.filter(_._1.contains("CompletableFuture"))
+    assert(pooled.isEmpty, s"graph_kcore jobs under a thread-pool site: $pooled")
+    val cuts = p.jobSites.filter(_._1.startsWith("cut at Graph.scala:"))
+    assert(cuts.nonEmpty, s"no job under a cut's site: ${p.jobSites}")
+  }
+
   test("AQE stage jobs are listed under their query, not the thread-pool site") {
     val (_, p) = QueryProfile(spark) {
       SparkEntry.queries("q21_waiting_suppliers")(spark, sf)
