@@ -14,7 +14,9 @@ import scala.concurrent.duration.Duration
   * and a HEADLINE subset of per-query timings at reduced precision — sized
   * to fit the capture window with room to grow. The complete record (every
   * query, full precision, stddev, per-query sample counts) goes to
-  * `bench_detail.json` in the working directory, committed with the repo.
+  * `bench_detail.json` in the working directory. That file is this run's
+  * record, never an input that shapes a measurement: every key gets the
+  * same untimed build and the same sampler whatever file is committed.
   *
   * Honesty rules (round-2 verdict): a query that throws on every attempt is
   * recorded in `failed` and excluded from `queries`/total — never timed. A
@@ -22,7 +24,7 @@ import scala.concurrent.duration.Duration
   * listed in `flaky` (round-3 advice: previously such errors were dropped).
   * Queries are isolated (cache cleared between runs); each reports min over
   * its actual attempt count (adaptive, 3..6 — the real per-query n is in
-  * bench_detail.json, round-3 advice).
+  * bench_detail.json, round-3 advice), taken after one untimed build.
   *
   * `concurrent` mirrors the reference's headline mode — N simultaneous
   * streams of the same plan on one session under FAIR scheduling
@@ -36,16 +38,6 @@ object Bench {
   private val ScanIterations = 5
   private val StreamRows = 100000
   private val StreamChunks = 10
-
-  /** Queries whose committed floor exceeds this get one UNTIMED warm-up
-    * run before sampling (round-7 verdict item 3): the iterative heavies
-    * (dedup_cc, dedup_clusters, ann_topk_*) pay a 10–19 s first-run
-    * JIT/codegen spike — judge-measured 19.2 s cold vs 5.6 s steady on
-    * dedup_cc — which two driver captures in a row (r6, r7) couldn't
-    * absorb with min-of-3..6 adaptive sampling. Queries with NO committed
-    * floor (new this round) warm up too: their cost is unknown.
-    */
-  private[graft] val WarmupFloorSec = 3.0
 
   /** One query's bench outcome: min/stddev come from `timings`, `attempts`
     * is the true sample count (adaptive), `error` is the first throw seen
@@ -151,10 +143,13 @@ object Bench {
     r
   }
 
-  /** Adaptive sampling: start with `samples`, keep sampling (≤ maxSamples)
-    * until the two fastest agree within 20% — min-of-N is only a stable
-    * statistic once two near-floor observations exist (criterion-style;
-    * this VM shows multi-second scheduler/GC noise windows).
+  /** One untimed build per key, then adaptive sampling: start with
+    * `samples`, keep sampling (≤ maxSamples) until the two fastest agree
+    * within 20% — min-of-N is only a stable statistic once two near-floor
+    * observations exist (criterion-style; this VM shows multi-second
+    * scheduler/GC noise windows). The untimed build takes each key's
+    * first-run class-load/JIT/codegen cost (19.2 s cold vs 5.6 s steady on
+    * dedup_cc in round 7), so no key's samples include it.
     */
   def timeAll(spark: SparkSession,
       queries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame],
@@ -166,6 +161,7 @@ object Bench {
       case _ => false
     }
     queries.keys.toSeq.sorted.map { n =>
+      once(n) // the untimed build
       var rs = (1 to samples).map(_ => once(n))
       while (rs.size < maxSamples && !stable(rs.collect { case Right(t) => t }))
         rs :+= once(n)
@@ -201,9 +197,10 @@ object Bench {
   private[graft] val LightSec = 0.3
   private[graft] val NoiseRatio = 5.0
 
-  /** Per-query min map parsed out of a committed bench_detail.json (our own
-    * writer's format). Absent / corrupt input → empty map, never a throw —
-    * the self-check must not be able to break the bench.
+  /** Per-query min map parsed out of a previous bench_detail.json (our own
+    * writer's format), read only for the `suspect_noise` label. Absent /
+    * corrupt input → empty map, never a throw — the self-check must not be
+    * able to break the bench.
     */
   private[graft] def committedMins(detailJson: String): Map[String, Double] =
     """"queries":\{([^}]*)\}""".r.findFirstMatchIn(detailJson)
@@ -217,43 +214,6 @@ object Bench {
           case _ => None
         }
       }.toMap
-
-  /** A query whose min landed more than [[NoiseRatio]]× above its committed
-    * floor needs a time-shifted retry: the adaptive sampler's 20%-agreement
-    * test is satisfied by N uniformly-slow samples when a VM noise window
-    * covers the query's ENTIRE sampling block (round-5 driver capture:
-    * q_union_cte 0.23 s → 6.1 s, q_topk_per_key 0.21 s → 3.3 s while the
-    * other 97 queries sat at floor — and `suspect_noise` stayed false
-    * because the window was local, not collective).
-    */
-  private[graft] def needsRetime(min: Double, floor: Option[Double]): Boolean =
-    floor.exists(c => c > 0 && min > c * NoiseRatio)
-
-  /** Re-time every [[needsRetime]] query once more, AFTER the main pass —
-    * the time shift escapes a localized noise window. A genuine regression
-    * is slow in both passes (min merges all samples), so this pass can only
-    * remove false alarms, never hide a real slowdown. Returns the updated
-    * results plus the retimed names (recorded in bench_detail.json so a
-    * reader can see which mins came from the second chance).
-    */
-  private[graft] def retimePass(results: Seq[QueryResult],
-      committed: Map[String, Double], once: String => Either[String, Double],
-      samples: Int = Samples): (Seq[QueryResult], Seq[String]) = {
-    val slow = results.collect {
-      case r if r.timings.nonEmpty && needsRetime(r.timings.min, committed.get(r.name)) =>
-        r.name
-    }
-    val updated = results.map { r =>
-      if (!slow.contains(r.name)) r
-      else {
-        val extra = (1 to samples).map(_ => once(r.name))
-        r.copy(timings = r.timings ++ extra.collect { case Right(t) => t },
-          attempts = r.attempts + extra.size,
-          error = r.error.orElse(extra.collectFirst { case Left(m) => m }))
-      }
-    }
-    (updated, slow)
-  }
 
   /** True when this capture landed in one of the VM's noise windows: the
     * MEDIAN inflation of the light queries (committed min < [[LightSec]])
@@ -504,7 +464,8 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val detailPath = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "bench_detail.json"))
-    // the committed floor, read BEFORE this run overwrites the file
+    // the previous record's mins, read BEFORE this run overwrites the file;
+    // they only set the `suspect_noise` label
     val committed =
       if (java.nio.file.Files.exists(detailPath))
         committedMins(java.nio.file.Files.readString(detailPath))
@@ -514,54 +475,6 @@ object Bench {
       .config("spark.scheduler.mode", "FAIR")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    // SPARK_GRAFT_BENCH_GRAPH_ONLY=1 runs ONLY the graph_cached section
-    // (edge artifact built once + the analysis suite + sssp over it) and
-    // exits — the round-14 frontier mode for timing the graph family at
-    // the 2M-vector corpus without paying for the 249-query timed pass.
-    if (sys.env.contains("SPARK_GRAFT_BENCH_GRAPH_ONLY")) {
-      val gcOnly =
-        try graphCachedBench(spark, sfDir)
-        catch { case scala.util.control.NonFatal(e) =>
-          jmap(Seq("error" -> jstr(String.valueOf(e.getMessage).take(160))))
-        }
-      val line = jmap(Seq(
-        "metric" -> jstr("graph_cached_frontier"),
-        "graph_cached" -> gcOnly,
-        "sf" -> jstr(sfDir), "cpus" -> cpus))
-      // never clobber the committed floor file from frontier mode: write
-      // the detail only where the caller explicitly pointed it
-      if (sys.env.contains("SPARK_GRAFT_BENCH_DETAIL")) {
-        try java.nio.file.Files.writeString(detailPath, line + "\n")
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] detail write FAILED: $e")
-        }
-      }
-      println(line)
-      Console.out.flush()
-      spark.stop()
-      return
-    }
-
-    // SPARK_GRAFT_BENCH_STREAMING_ONLY=1 runs ONLY the streaming section
-    // and exits — for validating a new streaming leg without the
-    // 254-query timed pass. Like graph-only mode, it never clobbers the
-    // committed floor file.
-    if (sys.env.contains("SPARK_GRAFT_BENCH_STREAMING_ONLY")) {
-      val stOnly =
-        try streamingBench(spark, sfDir)
-        catch { case scala.util.control.NonFatal(e) =>
-          jmap(Seq("error" -> jstr(String.valueOf(e.getMessage).take(160))))
-        }
-      val line = jmap(Seq(
-        "metric" -> jstr("streaming_only"),
-        "streaming" -> stOnly,
-        "sf" -> jstr(sfDir), "cpus" -> cpus))
-      println(line)
-      Console.out.flush()
-      spark.stop()
-      return
-    }
 
     // SPARK_GRAFT_BENCH_ONLY=q1,q2,... restricts the timed pass to a subset
     // (used by tools/scaling_capture.sh to time the top-N floor queries at
@@ -582,18 +495,9 @@ object Bench {
       runOnce(spark, benchQueries, sfDir)(name)
 
     val names = benchQueries.keys.toSeq.sorted
-    runOnceMain(names.head) // warm-up: first-job/codegen/scan-index init
-    // untimed warm-up pass for the iterative heavies ([[WarmupFloorSec]])
-    // and any query without a committed floor yet
-    names.filter(n => committed.get(n).forall(_ > WarmupFloorSec) && n != names.head)
-      .foreach(runOnceMain)
     val benchSamples = sys.env.get("SPARK_GRAFT_BENCH_SAMPLES").map(_.toInt).getOrElse(Samples)
     val benchMaxSamples = sys.env.get("SPARK_GRAFT_BENCH_MAX_SAMPLES").map(_.toInt).getOrElse(MaxSamples)
-    val firstPass = timeAll(spark, benchQueries, sfDir, benchSamples, benchMaxSamples)
-    // second-chance pass for queries that sampled inside a noise window
-    // (runs BEFORE throughput/concurrent — those leave heap pressure that
-    // would bias the retry slow)
-    val (results, retimedNames) = retimePass(firstPass, committed, runOnceMain)
+    val results = timeAll(spark, benchQueries, sfDir, benchSamples, benchMaxSamples)
     val failed = results.filter(_.failed).filter(_.error.isDefined)
     val flaky = results.filter(_.flaky)
     val ok = results.filter(_.timings.nonEmpty)
@@ -722,19 +626,18 @@ object Bench {
     } finally {
       val total = ok.map(_.timings.min).sum
 
-      // Full-precision sidecar: EVERY query, stddev, true per-query attempt
-      // counts, flaky/failed error text. Committed to the repo so the judge
-      // (and future rounds) get exact numbers even though stdout is compact.
+      // Full-precision record of this run: EVERY query, stddev, true
+      // per-query attempt counts, flaky/failed error text — exact numbers
+      // even though stdout is compact.
       val detail = jmap(Seq(
         "metric" -> jstr("total"),
         "value" -> jnum(total),
         "unit" -> jstr("sec"),
         "queries" -> jmap(ok.map(r => r.name -> jnum(r.timings.min))),
-        // p50 alongside min (round-7 verdict item 7): the committed floor is
-        // a min-merge over captures, which harvests lucky tails on the
-        // iterative queries — the median is the steady-state a reader should
-        // expect, so floor-luck and regression are distinguishable without
-        // re-measuring
+        // p50 alongside min (round-7 verdict item 7): the min harvests lucky
+        // tails on the iterative queries — the median is the steady state a
+        // reader should expect, so floor-luck and regression are
+        // distinguishable without re-measuring
         "p50" -> jmap(ok.map(r => r.name -> jnum(p50(r.timings)))),
         "stddev" -> jmap(ok.map(r => r.name -> jnum(stddev(r.timings)))),
         // executor task time (min over samples, like the wall floor):
@@ -752,7 +655,6 @@ object Bench {
         "throughput" -> tp,
         "streaming" -> st,
         "graph_cached" -> gc,
-        "retimed" -> jarr(retimedNames),
         "sf" -> jstr(sfDir),
         "cpus" -> cpus))
       try java.nio.file.Files.writeString(detailPath, detail + "\n")

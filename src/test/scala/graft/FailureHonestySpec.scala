@@ -87,32 +87,25 @@ class FailureHonestySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!Bench.suspectNoise(few.map { case (k, v) => k -> v * 100 }, few))
   }
 
-  test("Bench retime pass gives noise-window victims a second chance, never hides regressions") {
-    val committed = Map("q_light" -> 0.2, "q_heavy" -> 8.0, "q_regressed" -> 0.2)
-    val results = Seq(
-      Bench.QueryResult("q_light", Seq(6.1, 6.2, 6.3), 3, None),     // noise victim
-      Bench.QueryResult("q_heavy", Seq(8.4), 1, None),               // at floor
-      Bench.QueryResult("q_regressed", Seq(4.0, 4.1), 2, None),      // real slowdown
-      Bench.QueryResult("q_new", Seq(5.0), 1, None),                 // no committed floor
-      Bench.QueryResult("q_broken", Nil, 3, Some("boom")))           // failed: never retried
-    var calls = List.empty[String]
-    val once: String => Either[String, Double] = {
-      case n @ "q_light" => calls ::= n; Right(0.21)     // retry escapes the window
-      case n @ "q_regressed" => calls ::= n; Right(4.0)  // retry still slow
-      case n => calls ::= n; Right(99.0)
+  test("Bench.timeAll builds every key once untimed before its samples") {
+    // each key's first build sleeps ColdSec, standing in for a cold
+    // first-run cost: it must land in the untimed build, never in a timing
+    val ColdSec = 2.0
+    val builds = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    val counting = poisoned.map { case (n, q) =>
+      n -> ((s: SparkSession, dir: String) => {
+        builds(n) += 1
+        if (builds(n) == 1) Thread.sleep((ColdSec * 1000).toLong)
+        q(s, dir)
+      })
     }
-    val (updated, retimed) = Bench.retimePass(results, committed, once, samples = 1)
-    assert(retimed.toSet == Set("q_light", "q_regressed"), s"retimed: $retimed")
-    assert(calls.toSet == Set("q_light", "q_regressed"), "only >5x-floor queries re-run")
-    val byName = updated.map(r => r.name -> r).toMap
-    assert(byName("q_light").timings.min == 0.21, "noise victim's min recovers")
-    assert(byName("q_regressed").timings.min == 4.0, "a real regression stays visible")
-    assert(byName("q_heavy").timings == Seq(8.4) && byName("q_new").timings == Seq(5.0),
-      "at-floor and no-floor queries untouched")
-    assert(byName("q_broken").timings.isEmpty, "failed queries are not retried")
-    assert(byName("q_light").attempts == 4, "attempt count reflects the retry")
-    // retime with empty committed floor is a no-op
-    assert(Bench.retimePass(results, Map.empty, once, 1)._2.isEmpty)
+    val results = Bench.timeAll(spark, counting, sf, samples = 2, maxSamples = 3)
+    assert(results.map(_.name) == Seq("broken_query", "good_query"))
+    results.foreach { r =>
+      assert(builds(r.name) == r.attempts + 1, s"${r.name}: ${builds(r.name)} builds, $r")
+      assert(r.timings.forall(_ < ColdSec), s"${r.name}: untimed build in timings $r")
+    }
+    assert(results.find(_.name == "good_query").get.timings.nonEmpty)
   }
 
   test("Bench stdout line fits the driver's 2000-char tail capture") {
